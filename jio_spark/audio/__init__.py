@@ -3,14 +3,12 @@ SURVEY.md §2.3 last row): stdlib/numpy codecs, a deterministic synthetic
 clip generator (FIXTURES.md §1), and the Arrow-batched decode-and-check
 rule with explicit codec/duration salting."""
 
-from .codecs import (decode_wav, encode_adpcm_wav, encode_alaw_wav,
-                     encode_pcm16_wav, encode_ulaw_wav, synth_wave)
+from .codecs import decode_wav, encode_wav, synth_wave
 from .synth import clips_frame, expected_signal, expected_transcript
 from .decode import decode_check, salted_repartition
 
 __all__ = [
-    "decode_wav", "encode_pcm16_wav", "encode_ulaw_wav", "encode_alaw_wav",
-    "encode_adpcm_wav",
+    "decode_wav", "encode_wav",
     "synth_wave", "clips_frame", "expected_signal", "expected_transcript",
     "decode_check", "salted_repartition",
 ]

@@ -3,52 +3,63 @@ soundfile/librosa/scipy (SURVEY.md §7 environment facts), and the reference
 has no audio at all; formats follow the public RIFF/WAVE and ITU-T G.711
 specifications.
 
-Supported WAVE format tags:
-* 1      — PCM little-endian: signed 16-bit (``pcm_s16le``), signed
-  24-bit (``pcm_s24le`` — the studio mastering width; compared at int16
-  precision, exact for payloads produced from 16-bit sources), or the
-  legacy unsigned 8-bit convention (``pcm_u8`` — WAV stores 8-bit PCM
-  excess-128 by specification)
-* 3      — IEEE float32 (``pcm_f32le``, the float-mastering convention)
-  or float64 (``pcm_f64le``, the rare scientific/DAW export width);
-  /32768 scaling, decode rounds ties-to-even back to int16
-* 6      — ITU-T G.711 A-law
-* 7      — ITU-T G.711 μ-law
-* 0x11   — IMA/DVI ADPCM (``adpcm_ima``), mono 4-bit
-* 0xFFFE — WAVE_FORMAT_EXTENSIBLE: the real format rides the SubFormat
-  GUID's leading tag bytes; unwrapped to one of the above (modern
-  encoders emit EXTENSIBLE even for plain mono PCM)
+Everything codec-specific lives in one table, :data:`CODECS`: each
+:class:`CodecSpec` row maps a WAVE (format tag, bits per sample) pair to
+the codec's name, the numpy dtype of one coded sample, its decode to
+int16 and its encode from int16:
 
-Channels: 1 or 2. Stereo is supported for every codec. The per-SAMPLE
-codecs (PCM widths, G.711, float) decode the interleaved payload in one
-pass (their decodes commute with interleaving; :class:`StereoCoded`);
-stereo IMA ADPCM (per-channel 4-byte block headers + data interleaved
-in 4-byte groups) de-interleaves each block into two virtual MONO
-sub-blocks so one run of the mono recurrence decodes both channels
-(:func:`adpcm_stereo_decode_stacked`). Decode policy for both is
+=========  ======  ====  ==========================================
+codec      tag     bits  coded sample
+=========  ======  ====  ==========================================
+pcm_s16le  1       16    little-endian int16 (decode is identity)
+ulaw       7       8     ITU-T G.711 μ-law byte (256-entry LUT)
+alaw       6       8     ITU-T G.711 A-law byte (256-entry LUT)
+adpcm_ima  0x11    4     IMA/DVI ADPCM nibble, block-coded
+pcm_u8     1       8     WAV's excess-128 unsigned byte
+pcm_s24le  1       24    3-byte little-endian int (studio width;
+                         compared at int16 precision, exact for
+                         payloads produced from 16-bit sources)
+pcm_f32le  3       32    IEEE float32, /32768 scaling, decode rounds
+                         ties-to-even back to int16
+pcm_f64le  3       64    IEEE float64, same scaling
+=========  ======  ====  ==========================================
+
+WAVE_FORMAT_EXTENSIBLE (0xFFFE) is unwrapped by :func:`parse_wav` to the
+real tag carried in the SubFormat GUID's leading bytes (modern encoders
+emit EXTENSIBLE even for plain mono PCM). The table is the only place
+the codec set is written down: the parser looks (tag, bits) up in it,
+the writer (:func:`encode_wav`, :data:`ENCODERS`) encodes through it,
+and the gate validation (``decode.KNOWN_CODECS``) and the codec
+dimension (``runner.default_codec_dim``) are derived from it.
+
+:func:`parse_wav` returns one zero-copy view, :class:`Coded`, for every
+codec: the spec, the payload, the channel count, the frame count and the
+container's block_align. Channels: 1 or 2. Decode policy for stereo is
 downmix-to-mono ``(L+R+1)>>1`` before the SNR check — the reference
-signal is mono, and the downmix is exact on dual-mono content.
-
-G.711 companding is implemented as vectorized numpy over int16 arrays
-(standard bias-133/segment encoding for μ-law, 13-bit segment encoding for
-A-law) — decode is exact table lookup, encode matches the canonical
-reference tables.
+signal is mono, and the downmix is exact on dual-mono content. The
+per-sample codecs decode any stretch of frames on its own (their decodes
+commute with channel interleaving), so :func:`snr_db_vs_period` decodes
+and downmixes one cache-sized block at a time and never materializes a
+clip.
 
 IMA ADPCM follows the public IMA Digital Audio Pack algorithm (the step /
-index tables every implementation shares). Unlike G.711 it is STATEFUL —
-a per-sample (predictor, step-index) recurrence — so it cannot be a pure
-LUT gather. Blocks are independent, so both codecs run the recurrence
-once per sample position while staying vectorized ACROSS blocks; the
-batched entrypoint (:func:`adpcm_ima_decode_stacked`) stacks every block
-of every clip in an Arrow batch into one matrix so the Python-level loop
-cost (samples-per-block iterations) amortizes over the whole batch rather
-than being paid per clip.
+index tables every implementation shares). Unlike the others it is
+STATEFUL — a per-sample (predictor, step-index) recurrence over blocks —
+so it is the table's one block-coded row. Blocks are independent, so the
+recurrence runs once per sample position while staying vectorized ACROSS
+blocks; a multi-channel block (one 4-byte header per channel, then the
+data interleaved in 4-byte groups per channel) splits into one virtual
+mono block per channel, and :func:`adpcm_decode_stacked` stacks every
+block of every clip in an Arrow batch into one matrix so the Python-level
+loop cost (samples-per-block iterations) amortizes over the whole batch
+rather than being paid per clip.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Tuple
+from functools import partial
+from typing import Callable, NamedTuple, Optional, Tuple
 
 import numpy as np
 
@@ -135,7 +146,7 @@ def alaw_decode(a: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# IMA/DVI ADPCM (WAVE format tag 0x11), mono
+# IMA/DVI ADPCM (WAVE format tag 0x11)
 
 _IMA_STEPS = np.array([
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
@@ -160,115 +171,51 @@ _IMA_NEXT = np.clip(np.arange(89, dtype=np.int32)[:, None]
                     + _IMA_INDEX_ADJ[_NIB & 7], 0, 88).reshape(-1)
 
 
-def adpcm_ima_samples_per_block(block_align: int) -> int:
-    """Mono IMA WAVE block: 4-byte header (predictor int16, step index,
-    reserved) + 2 samples per payload byte + the header's own sample."""
-    return (block_align - 4) * 2 + 1
+def adpcm_frames_per_block(block_align: int, channels: int = 1) -> int:
+    """Frames per IMA WAVE block: one 4-byte header per channel (predictor
+    int16, step index, reserved), then 2 samples per data byte, plus each
+    header's own sample. With more than one channel the data interleaves
+    in 4-byte (8-nibble) groups per channel, so it must split evenly into
+    whole group rounds — at 2 channels this is the WAVEFORMATEX
+    ``block_align − 7``. Raises ValueError for a block_align the layout
+    cannot hold."""
+    data = block_align - 4 * channels
+    group = 4 * channels if channels > 1 else 1
+    if data < group or data % group:
+        layout = "stereo " if channels == 2 else ""
+        raise ValueError(f"malformed {layout}adpcm payload: block_align "
+                         f"{block_align} out of range for {channels} "
+                         f"channel(s)")
+    return data * 2 // channels + 1
 
 
-def adpcm_stereo_frames_per_block(block_align: int) -> int:
-    """Stereo IMA WAVE block: one 4-byte header PER CHANNEL, then the
-    data interleaved in 4-byte (8-nibble) groups per channel — frames
-    per block = (block_align − 4·2)·8 / (4·2) + 1 = block_align − 7
-    (the WAVEFORMATEX wSamplesPerBlock formula at 4 bits, 2 channels)."""
-    return block_align - 7
-
-
-def _stereo_virtual_mono_blocks(blocks: np.ndarray) -> np.ndarray:
-    """(n, block_align) stereo IMA blocks → (2n, 4 + (ba−8)/2) virtual
-    MONO blocks (all left channels, then all right): each channel's
-    header plus its de-interleaved 4-byte data groups form a valid mono
-    block, so ONE run of the mono recurrence decodes both channels of
-    every block. The channel split is pure reshape/slice — no Python
-    loop."""
-    n, ba = blocks.shape
-    groups = blocks[:, 8:].reshape(n, (ba - 8) // 8, 2, 4)
-    left = np.concatenate(
-        [blocks[:, 0:4], groups[:, :, 0, :].reshape(n, -1)], axis=1)
-    right = np.concatenate(
-        [blocks[:, 4:8], groups[:, :, 1, :].reshape(n, -1)], axis=1)
-    return np.concatenate([left, right], axis=0)
-
-
-def adpcm_stereo_decode_channels(payload: np.ndarray,
-                                 block_align: int):
-    """One stereo IMA payload → (left, right) int16 PCM at full
-    block-padded length (callers trim to the fact-chunk frame count).
-    The per-channel samples are BIT-EXACT mono recurrences over the
-    de-interleaved sub-blocks (pinned against the scalar oracle in
-    tests/test_audio_adpcm.py)."""
-    blocks = np.ascontiguousarray(payload).reshape(-1, block_align)
+def _channel_blocks(blocks: np.ndarray, channels: int) -> np.ndarray:
+    """(n, block_align) IMA blocks → (channels·n, 4 + data/channels)
+    virtual MONO blocks, channel-major: each channel's header plus its
+    de-interleaved 4-byte data groups form a valid mono block, so ONE run
+    of the mono recurrence decodes every channel of every block. The
+    split is pure reshape/slice — no Python loop over blocks."""
+    if channels == 1:
+        return blocks
     n = blocks.shape[0]
-    dec = _adpcm_decode_blocks(_stereo_virtual_mono_blocks(blocks))
-    return dec[:n].reshape(-1), dec[n:].reshape(-1)
-
-
-def adpcm_stereo_decode_stacked(payloads, block_align: int):
-    """Stereo analog of :func:`adpcm_ima_decode_stacked`: every block of
-    every stereo clip in the batch decodes in ONE mono-recurrence run
-    (left+right channels stacked as virtual mono blocks), then each
-    clip's channels downmix ``(L+R+1)>>1`` to the comparison-domain
-    mono signal. Returns one int16 array of FRAMES per payload."""
-    for p in payloads:
-        if p.nbytes % block_align:
-            raise ValueError(
-                f"adpcm payload of {p.nbytes} bytes is not a multiple "
-                f"of block_align {block_align}")
-    counts = [p.nbytes // block_align for p in payloads]
-    if not counts or sum(counts) == 0:
-        return [np.empty(0, dtype=np.int16) for _ in payloads]
-    blocks = np.concatenate(
-        [np.ascontiguousarray(p).reshape(-1) for p in payloads]
-    ).reshape(-1, block_align)
-    nb = blocks.shape[0]
-    dec = _adpcm_decode_blocks(_stereo_virtual_mono_blocks(blocks))
-    left, right = dec[:nb].astype(np.int32), dec[nb:].astype(np.int32)
-    mixed = ((left + right + 1) >> 1).astype(np.int16)
-    out, off = [], 0
-    for c in counts:
-        out.append(mixed[off:off + c].reshape(-1))
-        off += c
-    return out
-
-
-def adpcm_ima_encode_stereo(left: np.ndarray, right: np.ndarray,
-                            block_align: int = 256) -> bytes:
-    """Two int16 channels → stereo IMA ADPCM payload: each channel is
-    encoded independently by the vectorized mono encoder at the
-    per-channel sub-block size (4 + (ba−8)/2), then headers and 4-byte
-    data groups interleave per the stereo block layout. Channels must be
-    equal length (pad upstream)."""
-    if len(left) != len(right):
-        raise ValueError("stereo adpcm channels must be equal length")
-    if block_align < 16 or (block_align - 8) % 8:
-        raise ValueError(
-            f"stereo adpcm block_align {block_align} invalid: needs "
-            f">= 16 with (block_align - 8) % 8 == 0")
-    sub_ba = 4 + (block_align - 8) // 2
-    enc_l = np.frombuffer(adpcm_ima_encode(left, sub_ba), np.uint8) \
-        .reshape(-1, sub_ba)
-    enc_r = np.frombuffer(adpcm_ima_encode(right, sub_ba), np.uint8) \
-        .reshape(-1, sub_ba)
-    n = enc_l.shape[0]
-    out = np.empty((n, block_align), dtype=np.uint8)
-    out[:, 0:4] = enc_l[:, 0:4]
-    out[:, 4:8] = enc_r[:, 0:4]
-    gl = enc_l[:, 4:].reshape(n, -1, 4)
-    gr = enc_r[:, 4:].reshape(n, -1, 4)
-    inter = np.stack([gl, gr], axis=2)          # (n, groups, 2, 4)
-    out[:, 8:] = inter.reshape(n, -1)
-    return out.tobytes()
+    heads = blocks[:, :4 * channels].reshape(n, channels, 4)
+    groups = blocks[:, 4 * channels:].reshape(n, -1, channels, 4)
+    return np.concatenate([
+        np.concatenate([heads[:, c], groups[:, :, c].reshape(n, -1)],
+                       axis=1)
+        for c in range(channels)])
 
 
 def _adpcm_decode_blocks(blocks: np.ndarray) -> np.ndarray:
-    """(n_blocks, block_align) uint8 → (n_blocks, samples_per_block) int16.
+    """(n_blocks, block_align) uint8 mono blocks → (n_blocks,
+    samples_per_block) int16.
 
     The (predictor, index) recurrence is inherently sequential per sample,
     so the loop runs samples_per_block-1 times — but every op inside is
     vectorized across ALL rows, so cost amortizes with the number of
-    blocks (see adpcm_ima_decode_stacked for the batch-stacking caller)."""
+    blocks (see adpcm_decode_stacked for the batch-stacking caller)."""
     nb, ba = blocks.shape
-    spb = adpcm_ima_samples_per_block(ba)
+    spb = adpcm_frames_per_block(ba)
     pred = (blocks[:, 0].astype(np.int32)
             | (blocks[:, 1].astype(np.int32) << 8))
     pred = (pred ^ 0x8000) - 0x8000            # sign-extend int16
@@ -293,16 +240,39 @@ def _adpcm_decode_blocks(blocks: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(out_t.T)
 
 
-def adpcm_ima_decode_stacked(payloads, block_align: int):
+def adpcm_decode_channels(payload: np.ndarray, block_align: int,
+                          channels: int = 1) -> np.ndarray:
+    """One IMA payload → (channels, frames) int16 PCM at full
+    block-padded length (callers trim to the fact-chunk frame count).
+    Each channel is a BIT-EXACT mono recurrence over its de-interleaved
+    sub-blocks (pinned against the scalar oracle in
+    tests/test_audio_adpcm.py)."""
+    blocks = np.ascontiguousarray(payload).reshape(-1, block_align)
+    dec = _adpcm_decode_blocks(_channel_blocks(blocks, channels))
+    return dec.reshape(channels, -1)
+
+
+def _downmix(left: np.ndarray, right: np.ndarray) -> np.ndarray:
+    """Stereo → mono ``(L + R + 1) >> 1`` (round-half-up mean — exact
+    identity for dual-mono content, so a stereo file carrying the
+    reference signal on both channels measures the same SNR as its mono
+    counterpart). Per-channel SNR is deliberately NOT computed: the
+    reference signal is mono, and the documented policy is
+    downmix-then-compare (FIXTURES.md §1b)."""
+    return ((left.astype(np.int32) + right + 1) >> 1).astype(np.int16)
+
+
+def adpcm_decode_stacked(payloads, block_align: int, channels: int = 1):
     """Decode MANY clips' payloads in one pass: every block of every clip
     is stacked into a single (total_blocks, block_align) matrix so the
     sequential-per-sample loop in :func:`_adpcm_decode_blocks` runs once
-    per BATCH, not once per clip. Returns one int16 array per payload
-    (full samples-per-block length; callers trim to the clip's true
-    sample count). This is what keeps ADPCM viable in the Arrow decode
-    UDF — per-clip decode pays ~500 numpy-dispatch round-trips on
-    ~30-element vectors, the stacked form pays the same 500 on
-    thousands-of-elements vectors."""
+    per BATCH, not once per clip (``channels`` 1 or 2; stereo: both
+    channels of every block in the same run, then the downmix). Returns
+    one int16 array of frames per payload (full block-padded length;
+    callers trim to the clip's true frame count). This is what keeps
+    ADPCM viable in the Arrow decode UDF — per-clip decode pays ~500
+    numpy-dispatch round-trips on ~30-element vectors, the stacked form
+    pays the same 500 on thousands-of-elements vectors."""
     for p in payloads:
         if p.nbytes % block_align:
             # the concatenate+reshape below only needs the TOTAL to be a
@@ -315,28 +285,25 @@ def adpcm_ima_decode_stacked(payloads, block_align: int):
     counts = [p.nbytes // block_align for p in payloads]
     if not counts or sum(counts) == 0:
         return [np.empty(0, dtype=np.int16) for _ in payloads]
-    blocks = np.concatenate(
-        [np.ascontiguousarray(p).reshape(-1) for p in payloads]
-    ).reshape(-1, block_align)
-    dec = _adpcm_decode_blocks(blocks)
-    out, off = [], 0
-    for c in counts:
-        out.append(dec[off:off + c].reshape(-1))
-        off += c
-    return out
+    dec = adpcm_decode_channels(
+        np.concatenate([np.ascontiguousarray(p).reshape(-1)
+                        for p in payloads]), block_align, channels)
+    mono = dec[0] if channels == 1 else _downmix(dec[0], dec[1])
+    frames_per_block = len(mono) // sum(counts)
+    return np.split(mono, np.cumsum(counts[:-1]) * frames_per_block)
 
 
-def adpcm_ima_encode(pcm: np.ndarray, block_align: int = 256) -> bytes:
-    """int16 PCM → IMA ADPCM payload (whole blocks; the tail block is
-    padded by repeating the final sample, trimmed on decode via the fact
-    chunk's sample count). Encoder-side predictor/index updates replay
-    the decoder tables exactly, so encode∘decode drift is just the
+def _adpcm_encode_mono(pcm: np.ndarray, block_align: int) -> np.ndarray:
+    """int16 PCM → (n_blocks, block_align) uint8 mono IMA blocks (the tail
+    block is padded by repeating the final sample, trimmed on decode via
+    the fact chunk's sample count). Encoder-side predictor/index updates
+    replay the decoder tables exactly, so encode∘decode drift is just the
     quantizer's — the property the SNR check measures.
 
     Vectorized across blocks like the decoder: each block's initial
     predictor is its first sample (stored verbatim in the header) and the
     initial step index is chosen per block from the first delta."""
-    spb = adpcm_ima_samples_per_block(block_align)
+    spb = adpcm_frames_per_block(block_align)
     n = len(pcm)
     nb = max(1, -(-n // spb))
     pad = nb * spb - n
@@ -375,208 +342,32 @@ def adpcm_ima_encode(pcm: np.ndarray, block_align: int = 256) -> bytes:
         nibbles_t[k] = nib
     nibbles = np.ascontiguousarray(nibbles_t.T)
     packed = (nibbles[:, 0::2] | (nibbles[:, 1::2] << 4)).astype(np.uint8)
-    return np.concatenate([header, packed], axis=1).tobytes()
+    return np.concatenate([header, packed], axis=1)
 
 
-class AdpcmCoded:
-    """Zero-copy view of an IMA ADPCM data chunk plus the block geometry
-    needed to decode it. ``len()`` is the DECODED frame count (samples
-    for mono, frames for stereo — the unit the dur/n_samples checks are
-    defined in), keeping parse_wav's one-len()-per-decoded-sample
-    invariant; ``nbytes`` is the raw payload size, keeping the fuzz
-    contract's no-amplification bound. ``channels == 2`` selects the
-    stereo block layout (per-channel headers + interleaved 4-byte data
-    groups) whose decode downmixes ``(L+R+1)>>1`` like StereoCoded."""
-
-    __slots__ = ("payload", "block_align", "n_samples", "channels")
-
-    def __init__(self, payload: np.ndarray, block_align: int,
-                 n_samples: int, channels: int = 1):
-        self.payload = payload
-        self.block_align = block_align
-        self.n_samples = n_samples
-        self.channels = channels
-
-    def __len__(self) -> int:
-        return self.n_samples
-
-    @property
-    def nbytes(self) -> int:
-        return self.payload.nbytes
-
-    def decode(self) -> np.ndarray:
-        """Per-clip decode (tests / snr_db_vs_period fallback); the hot
-        Arrow path batches clips through adpcm_ima_decode_stacked /
-        adpcm_stereo_decode_stacked."""
-        fn = (adpcm_stereo_decode_stacked if self.channels == 2
-              else adpcm_ima_decode_stacked)
-        (pcm,) = fn([self.payload], self.block_align)
-        return pcm[:self.n_samples]
+def adpcm_ima_encode(pcm: np.ndarray, block_align: int = 256,
+                     channels: int = 1) -> bytes:
+    """Interleaved int16 PCM (``channels`` samples per frame) → IMA ADPCM
+    payload. Each channel is encoded independently by the vectorized mono
+    encoder at the per-channel sub-block size (4-byte header + its share
+    of the data), then headers and 4-byte data groups interleave per the
+    multi-channel block layout."""
+    adpcm_frames_per_block(block_align, channels)       # geometry check
+    if channels == 1:
+        return _adpcm_encode_mono(pcm, block_align).tobytes()
+    if len(pcm) % channels:
+        raise ValueError("adpcm channels must be equal length")
+    sub = 4 + (block_align - 4 * channels) // channels
+    enc = [_adpcm_encode_mono(pcm[c::channels], sub)
+           for c in range(channels)]
+    n = enc[0].shape[0]
+    heads = np.concatenate([e[:, :4] for e in enc], axis=1)
+    groups = np.stack([e[:, 4:].reshape(n, -1, 4) for e in enc], axis=2)
+    return np.concatenate([heads, groups.reshape(n, -1)], axis=1).tobytes()
 
 
 # ---------------------------------------------------------------------------
-# signed 24-bit PCM (bits=24 under format tag 1 — studio mastering width)
-
-class Pcm24Coded:
-    """Zero-copy view of a 24-bit PCM data chunk. Like AdpcmCoded it
-    cannot be a one-element-per-sample numpy view (3 bytes per sample
-    have no native dtype), so ``len()``/``nbytes`` carry the invariants
-    and :meth:`decode` materializes int16 on demand — the comparison
-    precision of the whole check pipeline (references are int16 synth;
-    a 24-bit payload written from a 16-bit source round-trips exactly,
-    so SNR reads ∞ on clean clips)."""
-
-    __slots__ = ("payload",)
-
-    def __init__(self, payload: np.ndarray):
-        self.payload = payload
-
-    def __len__(self) -> int:
-        return self.payload.nbytes // 3
-
-    @property
-    def nbytes(self) -> int:
-        return self.payload.nbytes
-
-    def decode(self) -> np.ndarray:
-        b = np.ascontiguousarray(self.payload).reshape(-1, 3)
-        x = (b[:, 0].astype(np.int32)
-             | (b[:, 1].astype(np.int32) << 8)
-             | (b[:, 2].astype(np.int32) << 16))
-        x = (x ^ 0x800000) - 0x800000          # sign-extend int24
-        return (x >> 8).astype(np.int16)
-
-
-def pcm_s24_encode(pcm: np.ndarray) -> np.ndarray:
-    """int16 PCM → little-endian 3-byte samples (value << 8): the exact
-    inverse of Pcm24Coded.decode for 16-bit sources."""
-    x = pcm.astype(np.int32) << 8
-    out = np.empty((len(pcm), 3), dtype=np.uint8)
-    out[:, 0] = x & 0xFF
-    out[:, 1] = (x >> 8) & 0xFF
-    out[:, 2] = (x >> 16) & 0xFF
-    return out.reshape(-1)
-
-
-# ---------------------------------------------------------------------------
-# IEEE float32 PCM (WAVE format tag 3)
-
-class Float32Coded:
-    """Zero-copy view of an IEEE-float data chunk (format tag 3, incl.
-    the KSDATAFORMAT float GUID under WAVE_FORMAT_EXTENSIBLE). float32
-    has no int16 identity view, so like :class:`Pcm24Coded` the class
-    carries ``len()``/``nbytes`` and materializes int16 on demand.
-    :meth:`decode` scales by 32768 and rounds ties-to-even (np.rint) —
-    the exact inverse of :func:`pcm_f32_encode` for int16 sources
-    (int16/32768 is exact in float32's 24-bit mantissa), so clean clips
-    measure SNR ∞. Non-finite payload floats (a corrupt file can carry
-    NaN/±inf bit patterns) decode deterministically: NaN → 0, ±inf →
-    the int16 rails — never an undefined float→int cast."""
-
-    __slots__ = ("payload",)
-
-    def __init__(self, payload: np.ndarray):
-        self.payload = payload          # '<f4' view of the data chunk
-
-    def __len__(self) -> int:
-        return len(self.payload)
-
-    @property
-    def nbytes(self) -> int:
-        return self.payload.nbytes
-
-    def decode(self) -> np.ndarray:
-        x = np.rint(self.payload * np.float32(32768.0))
-        x = np.nan_to_num(x, nan=0.0, posinf=32767.0, neginf=-32768.0)
-        return np.clip(x, -32768.0, 32767.0).astype(np.int16)
-
-
-def pcm_f32_encode(pcm: np.ndarray) -> np.ndarray:
-    """int16 PCM → little-endian float32 samples in [-1, 1) at the
-    conventional /32768 scaling — the exact inverse of
-    Float32Coded.decode for 16-bit sources."""
-    return (pcm.astype(np.float32) / np.float32(32768.0)).astype("<f4")
-
-
-class Float64Coded:
-    """Zero-copy view of an IEEE double data chunk (tag 3, bits=64 —
-    the rare but legal scientific/DAW export width). Same decode
-    contract as :class:`Float32Coded`: ×32768, ties-to-even, NaN → 0,
-    ±inf → the int16 rails."""
-
-    __slots__ = ("payload",)
-
-    def __init__(self, payload: np.ndarray):
-        self.payload = payload          # '<f8' view of the data chunk
-
-    def __len__(self) -> int:
-        return len(self.payload)
-
-    @property
-    def nbytes(self) -> int:
-        return self.payload.nbytes
-
-    def decode(self) -> np.ndarray:
-        x = np.rint(self.payload * 32768.0)
-        x = np.nan_to_num(x, nan=0.0, posinf=32767.0, neginf=-32768.0)
-        return np.clip(x, -32768.0, 32767.0).astype(np.int16)
-
-
-def pcm_f64_encode(pcm: np.ndarray) -> np.ndarray:
-    """int16 PCM → little-endian float64 samples (/32768) — exact
-    inverse of Float64Coded.decode for 16-bit sources."""
-    return (pcm.astype(np.float64) / 32768.0).astype("<f8")
-
-
-# ---------------------------------------------------------------------------
-# stereo (nChannels == 2) for the per-sample codec family
-
-class StereoCoded:
-    """Two-channel interleaved coded view + the downmix decode policy.
-
-    parse_wav wraps the full interleaved payload's MONO coded view (the
-    per-sample codecs — PCM widths, G.711, float — commute with
-    interleaving, so one elementwise decode covers both channels).
-    ``len()`` is the FRAME count (samples per channel): the unit the
-    dur/n_samples checks are defined in, keeping 1000·len/sr == dur_ms
-    for stereo exactly as for mono. :meth:`decode` de-interleaves and
-    downmixes ``(L + R + 1) >> 1`` (round-half-up mean — exact identity
-    for dual-mono content, so a stereo file carrying the reference
-    signal on both channels measures the same SNR as its mono
-    counterpart). Per-channel SNR is deliberately NOT computed: the
-    reference signal is mono, and the documented policy is
-    downmix-then-compare (FIXTURES.md §1b). IMA ADPCM is NOT wrapped
-    here — its stereo layout is block-structured (per-channel headers +
-    interleaved 4-byte groups), handled by AdpcmCoded(channels=2)."""
-
-    __slots__ = ("inner", "codec")
-
-    def __init__(self, inner, codec: str):
-        self.inner = inner
-        self.codec = codec
-
-    def __len__(self) -> int:
-        return len(self.inner) // 2
-
-    @property
-    def nbytes(self) -> int:
-        return self.inner.nbytes
-
-    def decode(self) -> np.ndarray:
-        pcm = decode_coded(self.inner, self.codec)
-        n = (len(pcm) // 2) * 2
-        s = pcm[:n].astype(np.int32).reshape(-1, 2)
-        return ((s[:, 0] + s[:, 1] + 1) >> 1).astype(np.int16)
-
-
-#: every coded-view class parse_wav can return instead of a bare ndarray;
-#: decode_coded and the fused SNR kernel materialize these via .decode()
-CODED_CLASSES = (AdpcmCoded, Pcm24Coded, Float32Coded, Float64Coded,
-                 StereoCoded)
-
-
-# ---------------------------------------------------------------------------
-# unsigned 8-bit PCM (WAV's legacy excess-128 convention for bits=8)
+# the remaining per-sample codecs: unsigned 8-bit, signed 24-bit, IEEE float
 
 _PCMU8_LUT = ((np.arange(256, dtype=np.int32) - 128) << 8).astype(np.int16)
 
@@ -595,14 +386,147 @@ def pcm_u8_encode(pcm: np.ndarray) -> np.ndarray:
     return np.clip(q + 128, 0, 255).astype(np.uint8)
 
 
+def pcm_s24_decode(b: np.ndarray) -> np.ndarray:
+    """(n, 3) little-endian 24-bit samples → int16 (top 16 bits) — the
+    comparison precision of the whole check pipeline (references are
+    int16 synth; a 24-bit payload written from a 16-bit source
+    round-trips exactly, so SNR reads ∞ on clean clips)."""
+    x = (b[:, 0].astype(np.int32)
+         | (b[:, 1].astype(np.int32) << 8)
+         | (b[:, 2].astype(np.int32) << 16))
+    x = (x ^ 0x800000) - 0x800000          # sign-extend int24
+    return (x >> 8).astype(np.int16)
+
+
+def pcm_s24_encode(pcm: np.ndarray) -> np.ndarray:
+    """int16 PCM → little-endian 3-byte samples (value << 8): the exact
+    inverse of :func:`pcm_s24_decode` for 16-bit sources."""
+    x = pcm.astype(np.int32) << 8
+    out = np.empty((len(pcm), 3), dtype=np.uint8)
+    out[:, 0] = x & 0xFF
+    out[:, 1] = (x >> 8) & 0xFF
+    out[:, 2] = (x >> 16) & 0xFF
+    return out
+
+
+def float_decode(x: np.ndarray) -> np.ndarray:
+    """IEEE float samples → int16: ×32768 in the payload's own precision,
+    rounded ties-to-even (np.rint) — the exact inverse of
+    :func:`float_encode` for int16 sources (int16/32768 is exact even in
+    float32's 24-bit mantissa), so clean clips measure SNR ∞. Non-finite
+    payload floats (a corrupt file can carry NaN/±inf bit patterns)
+    decode deterministically: NaN → 0, ±inf → the int16 rails — never an
+    undefined float→int cast."""
+    x = np.rint(x * x.dtype.type(32768.0))
+    x = np.nan_to_num(x, nan=0.0, posinf=32767.0, neginf=-32768.0)
+    return np.clip(x, -32768.0, 32767.0).astype(np.int16)
+
+
+def float_encode(pcm: np.ndarray, dtype: str) -> np.ndarray:
+    """int16 PCM → IEEE float samples in [-1, 1) at the conventional
+    /32768 scaling."""
+    dt = np.dtype(dtype)
+    return pcm.astype(dt) / dt.type(32768.0)
+
+
+# ---------------------------------------------------------------------------
+# the codec table
+
+class CodecSpec(NamedTuple):
+    """One codec: its WAVE (tag, bits) key, the numpy dtype of one coded
+    sample, and its int16 decode/encode. A per-sample codec maps coded
+    samples → int16 and back elementwise; the one block-coded row (IMA
+    ADPCM, ``dtype`` None) decodes ``(payload, block_align, channels)``
+    and encodes ``(pcm, block_align, channels)``. ``label`` names the
+    layout in malformed-payload errors."""
+    name: str
+    tag: int
+    bits: int
+    dtype: Optional[np.dtype]
+    decode: Callable
+    encode: Callable
+    label: str
+
+    @property
+    def per_sample(self) -> bool:
+        return self.dtype is not None
+
+
+#: every codec the engine parses, decodes and writes, keyed by name
+CODECS = {s.name: s for s in (
+    CodecSpec("pcm_s16le", 1, 16, np.dtype("<i2"), lambda s: s,
+              lambda p: p.astype("<i2"), "pcm16"),
+    CodecSpec("ulaw", 7, 8, np.dtype(np.uint8), ulaw_decode, ulaw_encode,
+              "g711"),
+    CodecSpec("alaw", 6, 8, np.dtype(np.uint8), alaw_decode, alaw_encode,
+              "g711"),
+    CodecSpec("adpcm_ima", 0x11, 4, None,
+              lambda p, ba, ch: adpcm_decode_stacked([p], ba, ch)[0],
+              adpcm_ima_encode, "adpcm"),
+    CodecSpec("pcm_u8", 1, 8, np.dtype(np.uint8), pcm_u8_decode,
+              pcm_u8_encode, "pcm8"),
+    CodecSpec("pcm_s24le", 1, 24, np.dtype((np.uint8, 3)), pcm_s24_decode,
+              pcm_s24_encode, "pcm24"),
+    CodecSpec("pcm_f32le", 3, 32, np.dtype("<f4"), float_decode,
+              partial(float_encode, dtype="<f4"), "ieee-float"),
+    CodecSpec("pcm_f64le", 3, 64, np.dtype("<f8"), float_decode,
+              partial(float_encode, dtype="<f8"), "ieee-double"),
+)}
+_BY_FORMAT = {(s.tag, s.bits): s for s in CODECS.values()}
+
+
+class Coded:
+    """Zero-copy view of one WAV data chunk, undecoded: the codec spec,
+    the payload (one element per coded sample for the per-sample codecs,
+    raw bytes for block-coded ADPCM), the channel count, the frame count
+    and the container's block_align. ``len()`` is the FRAME count
+    (samples per channel — the unit the dur/n_samples checks are defined
+    in, keeping 1000·len/sr == dur_ms for every layout); ``nbytes`` is
+    the payload size, keeping the fuzz contract's no-amplification
+    bound."""
+
+    __slots__ = ("spec", "payload", "channels", "frames", "block_align")
+
+    def __init__(self, spec: CodecSpec, payload: np.ndarray, channels: int,
+                 frames: int, block_align: int):
+        self.spec = spec
+        self.payload = payload
+        self.channels = channels
+        self.frames = frames
+        self.block_align = block_align
+
+    def __len__(self) -> int:
+        return self.frames
+
+    @property
+    def nbytes(self) -> int:
+        return self.payload.nbytes
+
+    def decode(self, start: int = 0, stop: Optional[int] = None
+               ) -> np.ndarray:
+        """int16 mono PCM of frames ``[start, stop)``, stereo downmixed.
+        A per-sample codec decodes only that stretch; ADPCM decodes the
+        whole clip (blocks are its unit) and slices — the hot Arrow path
+        batches ADPCM clips through :func:`adpcm_decode_stacked`
+        instead."""
+        stop = self.frames if stop is None else stop
+        ch = self.channels
+        if not self.spec.per_sample:
+            return self.spec.decode(self.payload, self.block_align,
+                                    ch)[start:stop]
+        pcm = self.spec.decode(self.payload[start * ch:stop * ch])
+        return pcm if ch == 1 else _downmix(pcm[0::2], pcm[1::2])
+
+
+def pcm_view(pcm: np.ndarray) -> Coded:
+    """Already-decoded mono int16 PCM as a pcm_s16le view — the SNR
+    kernel's input for clips decoded ahead of it (stacked ADPCM)."""
+    return Coded(CODECS["pcm_s16le"], pcm, 1, len(pcm), 2)
+
+
 # ---------------------------------------------------------------------------
 # RIFF/WAVE container
 
-_FMT_PCM16 = 1
-_FMT_FLOAT = 3
-_FMT_ALAW = 6
-_FMT_ULAW = 7
-_FMT_ADPCM_IMA = 0x11
 _FMT_EXTENSIBLE = 0xFFFE
 
 #: WAVE_FORMAT_EXTENSIBLE SubFormat = {tag:04x}-0000-0010-8000-00AA00389B71:
@@ -610,70 +534,12 @@ _FMT_EXTENSIBLE = 0xFFFE
 #: remaining 14 are this fixed media-type suffix
 _EXT_GUID_SUFFIX = bytes.fromhex("000000001000800000AA00389B71")
 
-_CODEC_FMT = {"pcm_s16le": _FMT_PCM16, "alaw": _FMT_ALAW, "ulaw": _FMT_ULAW,
-              "adpcm_ima": _FMT_ADPCM_IMA, "pcm_f32le": _FMT_FLOAT}
-_FMT_CODEC = {v: k for k, v in _CODEC_FMT.items()}
 
-
-def _wav_bytes(payload: bytes, fmt: int, sr: int, bits: int,
-               channels: int = 1) -> bytes:
-    block = (bits // 8) * channels
-    header = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + len(payload), b"WAVE",
-        b"fmt ", 16, fmt, channels, sr, sr * block, block, bits,
-        b"data", len(payload))
-    return header + payload
-
-
-def encode_pcm16_wav(pcm: np.ndarray, sr: int) -> bytes:
-    """int16 samples → WAV (format tag 1)."""
-    return _wav_bytes(pcm.astype("<i2").tobytes(), _FMT_PCM16, sr, 16)
-
-
-def encode_ulaw_wav(pcm: np.ndarray, sr: int) -> bytes:
-    """int16 samples → μ-law WAV (format tag 7)."""
-    return _wav_bytes(ulaw_encode(pcm).tobytes(), _FMT_ULAW, sr, 8)
-
-
-def encode_alaw_wav(pcm: np.ndarray, sr: int) -> bytes:
-    """int16 samples → A-law WAV (format tag 6)."""
-    return _wav_bytes(alaw_encode(pcm).tobytes(), _FMT_ALAW, sr, 8)
-
-
-def encode_adpcm_wav(pcm: np.ndarray, sr: int,
-                     block_align: int = 256) -> bytes:
-    """int16 samples → IMA ADPCM WAV (format tag 0x11). Compressed WAVE
-    needs the full WAVEFORMATEX fmt chunk (cbSize=2 + wSamplesPerBlock)
-    and a fact chunk carrying the true sample count — the payload is
-    whole blocks, so without the fact chunk a decoder cannot distinguish
-    real samples from the final block's padding."""
-    if not 5 <= block_align <= 32771:
-        # container fields are uint16: wSamplesPerBlock = (ba-4)*2+1 must
-        # stay ≤ 65535, i.e. ba ≤ 32771. An out-of-range knob must fail
-        # as the module's documented ValueError, not surface as an
-        # unrelated low-level struct.error from the header pack.
-        raise ValueError(f"block_align {block_align} out of range "
-                         f"[5, 32771]")
-    spb = adpcm_ima_samples_per_block(block_align)
-    payload = adpcm_ima_encode(pcm, block_align)
-    byte_rate = (sr * block_align + spb - 1) // spb
-    header = struct.pack(
-        "<4sI4s4sIHHIIHHHH4sII4sI",
-        b"RIFF", 52 + len(payload), b"WAVE",
-        b"fmt ", 20, _FMT_ADPCM_IMA, 1, sr, byte_rate, block_align, 4,
-        2, spb,
-        b"fact", 4, len(pcm),
-        b"data", len(payload))
-    return header + payload
-
-
-def parse_wav(raw: bytes) -> Tuple[object, int, str]:
-    """WAV bytes → (coded samples as a ZERO-COPY view, sample rate, codec
-    name) without decoding: int16 view for pcm_s16le, uint8 view of the
-    companded bytes for G.711, an :class:`AdpcmCoded` block view for IMA
-    ADPCM. ``len()`` is the decoded sample count in every case (for
-    ADPCM via the fact chunk, since blocks are padded).
+def parse_wav(raw: bytes) -> Tuple[Coded, int, str]:
+    """WAV bytes → (:class:`Coded` ZERO-COPY view of the coded samples,
+    sample rate, codec name) without decoding. ``len()`` of the view is
+    the decoded frame count in every case (for ADPCM via the fact chunk,
+    since blocks are padded).
 
     Raises ValueError on malformed/truncated input (drives the corrupt-
     payload violations in FIXTURES.md §1).
@@ -681,9 +547,9 @@ def parse_wav(raw: bytes) -> Tuple[object, int, str]:
     The RIFF chunk list is WALKED per spec, not assumed canonical: a
     valid WAV may carry an 18/40-byte fmt chunk (WAVEFORMATEX/EXTENSIBLE)
     or fact/LIST chunks before data — the table's bytes come from
-    arbitrary encoders, not just this module's 44-byte writer — and a
-    buffer whose fmt fields are garbage must be rejected, not unpacked
-    from a fixed offset."""
+    arbitrary encoders, not just this module's writer — and a buffer
+    whose fmt fields are garbage must be rejected, not unpacked from a
+    fixed offset."""
     if len(raw) < 44 or raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     fmt = channels = sr = bits = block_align = fact_samples = None
@@ -741,184 +607,101 @@ def parse_wav(raw: bytes) -> Tuple[object, int, str]:
         raise ValueError("missing fmt chunk")
     if payload is None:
         raise ValueError("missing data chunk")
-    dlen = len(payload)
     if channels not in (1, 2):
         raise ValueError(f"unsupported channel count {channels}")
-    if fmt == _FMT_ADPCM_IMA:
-        # IMA: 4-bit samples, whole blocks only — a mid-block truncation
-        # cannot be decoded and must surface as ONE decode violation.
-        # Mono blocks: 4-byte header + data (≥5 bytes). Stereo blocks
-        # (round 5): one header per channel + data interleaved in
-        # 4-byte groups per channel, so the data region must split
-        # evenly into 8-byte group pairs (≥16 bytes, (ba−8) % 8 == 0).
-        if bits != 4 or block_align is None:
-            raise ValueError("malformed adpcm payload")
-        if channels == 1:
-            if block_align < 5:
-                raise ValueError("malformed adpcm payload")
-            spb = adpcm_ima_samples_per_block(block_align)
-        else:
-            if block_align < 16 or (block_align - 8) % 8:
-                raise ValueError("malformed stereo adpcm payload")
-            spb = adpcm_stereo_frames_per_block(block_align)
+    spec = _BY_FORMAT.get((fmt, bits))
+    if spec is None:
+        # a known tag at a width the table does not list is a malformed
+        # payload (e.g. 16-bit G.711 must surface as ONE decode
+        # violation, not be read one-sample-per-byte, doubling n_samples
+        # and misattributing the defect to dur/snr)
+        label = next((s.label for s in CODECS.values() if s.tag == fmt),
+                     None)
+        if label is None:
+            raise ValueError(f"unsupported format tag {fmt}")
+        raise ValueError(f"malformed {label} payload")
+    dlen = len(payload)
+    if spec.per_sample:
+        if dlen % spec.dtype.itemsize:
+            raise ValueError(f"malformed {spec.label} payload")
+        samples = np.frombuffer(payload, dtype=spec.dtype)
+        if len(samples) % channels:
+            raise ValueError("stereo payload with odd sample count")
+        frames = len(samples) // channels
+    else:
+        # IMA: whole blocks only — a mid-block truncation cannot be
+        # decoded and must surface as ONE decode violation
+        per_block = adpcm_frames_per_block(block_align, channels)
         if dlen == 0 or dlen % block_align:
             raise ValueError("truncated adpcm payload")
-        capacity = (dlen // block_align) * spb
-        n_samples = capacity
+        samples = np.frombuffer(payload, dtype=np.uint8)
+        frames = per_block * (dlen // block_align)
         if fact_samples is not None:
-            if fact_samples > capacity:
+            if fact_samples > frames:
                 raise ValueError("fact chunk exceeds adpcm capacity")
-            n_samples = fact_samples
-        coded = AdpcmCoded(np.frombuffer(payload, dtype=np.uint8),
-                           block_align, n_samples, channels)
-        return coded, sr, _FMT_CODEC[fmt]
-    # the remaining tags are all per-SAMPLE codecs: build the mono coded
-    # view over the whole interleaved payload, then wrap stereo — the
-    # elementwise decodes commute with channel interleaving
-    if fmt == _FMT_PCM16:
-        if bits == 8:
-            # WAV spec: 8-bit PCM is unsigned excess-128
-            coded, codec = np.frombuffer(payload, dtype=np.uint8), "pcm_u8"
-        elif bits == 24:
-            if dlen % 3:
-                raise ValueError("malformed pcm24 payload")
-            coded = Pcm24Coded(np.frombuffer(payload, dtype=np.uint8))
-            codec = "pcm_s24le"
-        elif bits != 16 or dlen % 2:
-            raise ValueError("malformed pcm16 payload")
-        else:
-            coded, codec = np.frombuffer(payload, dtype="<i2"), "pcm_s16le"
-    elif fmt in (_FMT_ULAW, _FMT_ALAW):
-        # G.711 is 8-bit by definition: a fmt chunk declaring 16-bit
-        # A-law/mu-law is malformed and must surface as ONE decode
-        # violation, not be read one-sample-per-byte (doubling
-        # n_samples and misattributing the defect to dur/snr)
-        if bits != 8:
-            raise ValueError("malformed g711 payload")
-        coded, codec = np.frombuffer(payload, dtype=np.uint8), \
-            _FMT_CODEC[fmt]
-    elif fmt == _FMT_FLOAT:
-        # WAVE_FORMAT_IEEE_FLOAT: float32 (the mastering convention) or
-        # float64 (rare but legal scientific/DAW export width)
-        if bits == 32:
-            if dlen % 4:
-                raise ValueError("malformed ieee-float payload")
-            coded = Float32Coded(np.frombuffer(payload, dtype="<f4"))
-            codec = "pcm_f32le"
-        elif bits == 64:
-            if dlen % 8:
-                raise ValueError("malformed ieee-double payload")
-            coded = Float64Coded(np.frombuffer(payload, dtype="<f8"))
-            codec = "pcm_f64le"
-        else:
-            raise ValueError("malformed ieee-float payload")
-    else:
-        raise ValueError(f"unsupported format tag {fmt}")
-    if channels == 2:
-        if len(coded) % 2:
-            raise ValueError("stereo payload with odd sample count")
-        coded = StereoCoded(coded, codec)
-    return coded, sr, codec
-
-
-def decode_coded(samples, codec: str) -> np.ndarray:
-    """Coded-sample view from :func:`parse_wav` → int16 PCM (mono; a
-    stereo container arrives as a StereoCoded whose decode applies the
-    documented downmix). Class dispatch first: a StereoCoded wrapping
-    G.711 must materialize through its own decode, not have the LUT
-    applied to the wrapper."""
-    if isinstance(samples, CODED_CLASSES):
-        return samples.decode()
-    if codec == "ulaw":
-        return ulaw_decode(samples)
-    if codec == "alaw":
-        return alaw_decode(samples)
-    if codec == "pcm_u8":
-        return pcm_u8_decode(samples)
-    return samples
+            frames = fact_samples
+    return Coded(spec, samples, channels, frames, block_align), sr, \
+        spec.name
 
 
 def decode_wav(raw: bytes) -> Tuple[np.ndarray, int, str]:
-    """WAV bytes → (int16 PCM, sample rate, codec name). Delegates header
-    and payload validation to :func:`parse_wav` so the malformed-input
-    behavior (which drives the corrupt-payload violations, FIXTURES.md §1)
-    cannot drift between the parse-only and full-decode paths."""
+    """WAV bytes → (int16 mono PCM, sample rate, codec name). Delegates
+    header and payload validation to :func:`parse_wav` so the
+    malformed-input behavior (which drives the corrupt-payload
+    violations, FIXTURES.md §1) cannot drift between the parse-only and
+    full-decode paths."""
     coded, sr, codec = parse_wav(raw)
-    return decode_coded(coded, codec), sr, codec
+    return coded.decode(), sr, codec
 
 
-def encode_pcm8_wav(pcm: np.ndarray, sr: int) -> bytes:
-    """int16 samples → unsigned 8-bit PCM WAV (format tag 1, bits=8)."""
-    return _wav_bytes(pcm_u8_encode(pcm).tobytes(), _FMT_PCM16, sr, 8)
+def encode_wav(pcm: np.ndarray, sr: int, codec: str, channels: int = 1,
+               block_align: int = 256) -> bytes:
+    """Interleaved int16 samples (``channels`` per frame) → WAV bytes in
+    ``codec``. Per-sample codecs write the canonical 16-byte fmt chunk.
+    IMA ADPCM (``block_align`` applies to it alone) writes the full
+    WAVEFORMATEX fmt chunk (cbSize=2 + wSamplesPerBlock) and a fact chunk
+    carrying the true frame count — the payload is whole blocks, so
+    without the fact chunk a decoder cannot distinguish real frames from
+    the final block's padding."""
+    spec = CODECS.get(codec)
+    if spec is None:
+        raise ValueError(f"no encoder for codec {codec!r}")
+    if spec.per_sample:
+        payload = spec.encode(pcm).tobytes()
+        align = spec.dtype.itemsize * channels
+        fmt = struct.pack("<HHIIHH", spec.tag, channels, sr, sr * align,
+                          align, spec.bits)
+        fact = b""
+    else:
+        spb = adpcm_frames_per_block(block_align, channels)
+        if max(spb, block_align) > 0xFFFF:
+            # the container fields are uint16: an out-of-range knob must
+            # fail as the module's documented ValueError, not surface as
+            # an unrelated low-level struct.error from the header pack
+            raise ValueError(f"block_align {block_align} out of range: "
+                             f"{spb} frames per block overflow the "
+                             f"16-bit header field")
+        payload = spec.encode(pcm, block_align, channels)
+        fmt = struct.pack("<HHIIHHHH", spec.tag, channels, sr,
+                          (sr * block_align + spb - 1) // spb, block_align,
+                          spec.bits, 2, spb)
+        fact = struct.pack("<4sII", b"fact", 4, len(pcm) // channels)
+    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt + fact
+            + b"data" + struct.pack("<I", len(payload)) + payload)
+    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def encode_pcm24_wav(pcm: np.ndarray, sr: int) -> bytes:
-    """int16 samples → signed 24-bit PCM WAV (format tag 1, bits=24)."""
-    return _wav_bytes(pcm_s24_encode(pcm).tobytes(), _FMT_PCM16, sr, 24)
-
-
-def encode_pcm32f_wav(pcm: np.ndarray, sr: int) -> bytes:
-    """int16 samples → IEEE float32 WAV (format tag 3, bits=32)."""
-    return _wav_bytes(pcm_f32_encode(pcm).tobytes(), _FMT_FLOAT, sr, 32)
-
-
-def encode_pcm64f_wav(pcm: np.ndarray, sr: int) -> bytes:
-    """int16 samples → IEEE float64 WAV (format tag 3, bits=64)."""
-    return _wav_bytes(pcm_f64_encode(pcm).tobytes(), _FMT_FLOAT, sr, 64)
-
-
-#: codec → (int16 samples → payload bytes, format tag, container bits) for
-#: the per-SAMPLE codec family — the shared table behind the mono encoders
-#: above and the stereo writer below (ADPCM is block-structured and mono-
-#: only; it keeps its dedicated encoder)
-_PAYLOAD_ENC = {
-    "pcm_s16le": (lambda p: p.astype("<i2").tobytes(), _FMT_PCM16, 16),
-    "ulaw": (lambda p: ulaw_encode(p).tobytes(), _FMT_ULAW, 8),
-    "alaw": (lambda p: alaw_encode(p).tobytes(), _FMT_ALAW, 8),
-    "pcm_u8": (lambda p: pcm_u8_encode(p).tobytes(), _FMT_PCM16, 8),
-    "pcm_s24le": (lambda p: pcm_s24_encode(p).tobytes(), _FMT_PCM16, 24),
-    "pcm_f32le": (lambda p: pcm_f32_encode(p).tobytes(), _FMT_FLOAT, 32),
-    "pcm_f64le": (lambda p: pcm_f64_encode(p).tobytes(), _FMT_FLOAT, 64),
-}
-
-
-def encode_adpcm_stereo_wav(left: np.ndarray, right: np.ndarray,
-                            sr: int, block_align: int = 256) -> bytes:
-    """Two int16 channels → stereo IMA ADPCM WAV (tag 0x11, channels=2):
-    WAVEFORMATEX fmt chunk with the stereo wSamplesPerBlock + fact chunk
-    carrying the true FRAME count (block padding is per channel)."""
-    if len(left) != len(right):
-        raise ValueError("stereo adpcm channels must be equal length")
-    spb = adpcm_stereo_frames_per_block(block_align)
-    payload = adpcm_ima_encode_stereo(left, right, block_align)
-    byte_rate = (sr * block_align + spb - 1) // spb
-    header = struct.pack(
-        "<4sI4s4sIHHIIHHHH4sII4sI",
-        b"RIFF", 52 + len(payload), b"WAVE",
-        b"fmt ", 20, _FMT_ADPCM_IMA, 2, sr, byte_rate, block_align, 4,
-        2, spb,
-        b"fact", 4, len(left),
-        b"data", len(payload))
-    return header + payload
+#: codec name → ``(int16 mono samples, sr, **kw) → WAV bytes``
+ENCODERS = {name: partial(encode_wav, codec=name) for name in CODECS}
 
 
 def encode_stereo_wav(pcm: np.ndarray, sr: int, codec: str) -> bytes:
     """Mono int16 samples → dual-mono stereo WAV (the same signal on both
     channels — the fixture convention, FIXTURES.md §1b: the downmix
     decode recovers the mono signal EXACTLY for the per-sample codecs,
-    so a stereo clip's SNR verdict matches its mono counterpart's).
-    adpcm_ima routes to :func:`encode_adpcm_stereo_wav` (round 5: stereo
-    ADPCM decodes for real; the dual-mono downmix equals the per-channel
-    decode exactly since both channels encode identically)."""
-    if codec == "adpcm_ima":
-        return encode_adpcm_stereo_wav(pcm, pcm, sr)
-    if codec not in _PAYLOAD_ENC:
-        raise ValueError(f"no stereo encoder for codec {codec!r}")
-    enc, fmt, bits = _PAYLOAD_ENC[codec]
-    inter = np.empty(2 * len(pcm), dtype=np.int16)
-    inter[0::2] = pcm
-    inter[1::2] = pcm
-    return _wav_bytes(enc(inter), fmt, sr, bits, channels=2)
+    and for ADPCM both channels encode identically, so a stereo clip's
+    SNR verdict matches its mono counterpart's)."""
+    return encode_wav(np.repeat(pcm, 2), sr, codec, channels=2)
 
 
 def wrap_extensible(raw: bytes) -> bytes:
@@ -942,12 +725,6 @@ def wrap_extensible(raw: bytes) -> bytes:
            + struct.pack("<H", fmt) + _EXT_GUID_SUFFIX)
     return (b"RIFF" + struct.pack("<I", 4 + 8 + 40 + len(rest)) + b"WAVE"
             + b"fmt " + struct.pack("<I", 40) + ext + rest)
-
-
-ENCODERS = {"pcm_s16le": encode_pcm16_wav, "ulaw": encode_ulaw_wav,
-            "alaw": encode_alaw_wav, "adpcm_ima": encode_adpcm_wav,
-            "pcm_u8": encode_pcm8_wav, "pcm_s24le": encode_pcm24_wav,
-            "pcm_f32le": encode_pcm32f_wav, "pcm_f64le": encode_pcm64f_wav}
 
 
 _PERIOD_CACHE: dict = {}
@@ -1016,34 +793,27 @@ def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
 _SNR_BLOCK = 1 << 17  # samples per block: f32 temporaries stay ~1.5 MB
 
 
-def snr_db_vs_period(coded: np.ndarray, codec: str,
+def snr_db_vs_period(coded: Coded, codec: str,
                      period: np.ndarray, n_ref: int) -> float:
-    """SNR of ``decode(coded)`` against a periodic reference, equivalent
-    to ``snr_db(np.tile(period, ...)[:n_ref], decode_coded(coded, codec))``
-    but FUSED and cache-blocked: the decoded clip and the tiled reference
-    are never materialized — each ≤128k-sample block is decoded, cast, and
-    dot-producted while resident in L2. At 32 cores on one socket the
-    unfused form is DRAM-bandwidth-bound (~24 bytes/sample of temporary
-    traffic vs ~3 here); this is what keeps the decode stage scaling with
-    cores (BENCH/BASELINE.md)."""
+    """SNR of ``coded.decode()`` against a periodic reference, equivalent
+    to ``snr_db(np.tile(period, ...)[:n_ref], coded.decode())`` but FUSED
+    and cache-blocked: the decoded clip and the tiled reference are never
+    materialized — each ≤128k-frame block is decoded (stereo downmixed),
+    cast, and dot-producted while resident in L2. At 32 cores on one
+    socket the unfused form is DRAM-bandwidth-bound (~24 bytes/sample of
+    temporary traffic vs ~3 here); this is what keeps the decode stage
+    scaling with cores (BENCH/BASELINE.md). ``codec`` is the name
+    :func:`parse_wav` returned alongside the view; the view's own spec
+    drives the decode."""
     n = min(n_ref, len(coded))
     if n == 0:
         return float("-inf")
-    if isinstance(coded, CODED_CLASSES):
-        # none of these has a per-sample LUT (ADPCM needs whole blocks,
-        # s24 has no 3-byte dtype, f32/stereo materialize via their own
-        # vectorized decode) — materialize the int16 PCM per clip (clips
-        # are ~KBs). The Arrow decode UDF still routes ADPCM through the
-        # batch-stacked path (decode.py); the others decode in a single
-        # vectorized pass, so per-clip is already the efficient form.
-        # lut must be None afterwards: a StereoCoded wrapping G.711
-        # already decoded — applying the companding LUT again would
-        # corrupt the samples.
-        coded = coded.decode()
-        lut = None
-    else:
-        lut = {"ulaw": _ULAW_LUT, "alaw": _ALAW_LUT,
-               "pcm_u8": _PCMU8_LUT}.get(codec)
+    if not coded.spec.per_sample:
+        # block-coded ADPCM cannot decode a stretch of frames on its
+        # own: decode the clip once (clips are ~KBs), then scan its PCM.
+        # The Arrow decode UDF batches these clips through the stacked
+        # decoder instead (decode.py).
+        coded = pcm_view(coded.decode())
     plen = len(period)
     blk = min(_SNR_BLOCK, n)
     reps = (blk + plen) // plen + 1
@@ -1052,8 +822,7 @@ def snr_db_vs_period(coded: np.ndarray, codec: str,
     off = 0
     while off < n:
         m = min(blk, n - off)
-        d = coded[off:off + m]
-        d = (d if lut is None else lut[d]).astype(np.float32)
+        d = coded.decode(off, off + m).astype(np.float32)
         r = buf[off % plen:off % plen + m]
         nz = r - d
         p_sig += float(np.dot(r, r))

@@ -27,8 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .codecs import (AdpcmCoded, adpcm_ima_decode_stacked,
-                     adpcm_stereo_decode_stacked, parse_wav,
+from .codecs import (CODECS, adpcm_decode_stacked, parse_wav, pcm_view,
                      snr_db_vs_period)
 from .synth import expected_period, expected_transcript
 
@@ -85,8 +84,7 @@ def _fill_adpcm_snr(pending, out, adpcm_thr: float) -> None:
     """Stacked-decode every deferred ADPCM row of a batch and write its
     snr_db/snr_ok verdicts against the pre-resolved adpcm gate.
     Grouped by (block_align, channels) — blocks of different geometry
-    cannot share a matrix, and stereo blocks route through the
-    channel-de-interleaving stacked decoder — and chunked to
+    cannot share a matrix — and chunked to
     ≤_ADPCM_STACK_SAMPLES decoded samples per stacked call, so
     temporaries stay ~MBs however large the Arrow batch; within a chunk
     ONE call runs the sequential recurrence for all clips (both stereo
@@ -111,11 +109,11 @@ def _fill_adpcm_snr(pending, out, adpcm_thr: float) -> None:
 
 def _snr_one_stack(items, ba: int, ch: int, out,
                    adpcm_thr: float) -> None:
-    fn = adpcm_stereo_decode_stacked if ch == 2 \
-        else adpcm_ima_decode_stacked
-    decoded = fn([c.payload for _, c, _, _ in items], ba)
+    decoded = adpcm_decode_stacked([c.payload for _, c, _, _ in items],
+                                   ba, ch)
     for (j, coded, period, n_ref), pcm in zip(items, decoded):
-        s = snr_db_vs_period(pcm[:len(coded)], "pcm_s16le", period, n_ref)
+        s = snr_db_vs_period(pcm_view(pcm[:len(coded)]), "pcm_s16le",
+                             period, n_ref)
         out["snr_db"][j] = s
         out["snr_ok"][j] = bool(s >= adpcm_thr)
 
@@ -123,9 +121,7 @@ def _snr_one_stack(items, ba: int, ch: int, out,
 #: every codec parse_wav can return — the gate mapping's key space is
 #: closed, so an unknown key is always a typo that would silently fall
 #: to the default gate
-KNOWN_CODECS = frozenset(
-    {"pcm_s16le", "pcm_u8", "pcm_s24le", "pcm_f32le", "pcm_f64le",
-     "ulaw", "alaw", "adpcm_ima"})
+KNOWN_CODECS = frozenset(CODECS)
 
 
 def validate_gates(snr_threshold) -> None:
@@ -227,7 +223,7 @@ def _decode_batches(check_reference: bool, snr_threshold,
             # ADPCM rows defer their SNR to one stacked decode after the
             # row loop: the codec's per-sample recurrence is paid once per
             # BATCH (vectorized across every block of every ADPCM clip),
-            # not once per clip (codecs.adpcm_ima_decode_stacked)
+            # not once per clip (codecs.adpcm_decode_stacked)
             adpcm_pending: list = []
             for j in range(n):
                 try:
@@ -264,7 +260,7 @@ def _decode_batches(check_reference: bool, snr_threshold,
                         out["transcript_match"][j] = False
                         continue
                     period, n_ref = expected_period(i)
-                    if isinstance(coded, AdpcmCoded):
+                    if not coded.spec.per_sample:
                         adpcm_pending.append((j, coded, period, n_ref))
                     else:
                         s = snr_db_vs_period(coded, fmt_codec, period,

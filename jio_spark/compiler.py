@@ -799,11 +799,47 @@ def _h_slength(cc, st, path, spec, schema):
                  f"length not equal to {n}")
 
 
+def _go_line_semantics(pattern: str) -> str:
+    r"""Go RE2 line terminators for a Java ``rlike`` pattern. Java's
+    ``.`` rejects ``\n``, ``\r``, ``\x85``, ``\u2028`` and ``\u2029``,
+    and its ``$`` also matches before a final one of them; RE2's ``.``
+    rejects only ``\n`` and its ``$`` (without the m flag) is end of
+    text. ``(?d)`` (UNIX_LINES) leaves ``\n`` the only terminator, and
+    each unescaped ``$`` outside a character class becomes ``\z``."""
+    out, i, in_class = [], 0, False
+    while i < len(pattern):
+        ch = pattern[i]
+        if ch == "\\":
+            out.append(pattern[i:i + 2])
+            i += 2
+            continue
+        if in_class and pattern.startswith("[:", i) and ":]" in pattern[i:]:
+            j = pattern.index(":]", i) + 2          # [[:alpha:]]
+            out.append(pattern[i:j])
+            i = j
+            continue
+        if in_class:
+            in_class = ch != "]"
+        elif ch == "[":
+            # a ']' first in the class (after an optional '^') is literal
+            j = i + 1 + pattern.startswith("^", i + 1)
+            j += pattern.startswith("]", j)
+            out.append(pattern[i:j])
+            i, in_class = j, True
+            continue
+        elif ch == "$":
+            ch = r"\z"
+        out.append(ch)
+        i += 1
+    return "(?d)" + "".join(out)
+
+
 def _h_regex(cc, st, path, spec, schema):
     pattern = spec.params["pattern"]
     name = spec.params.get("display", "regex")
+    go_pattern = _go_line_semantics(pattern)
     _gated_check(cc, st, path, name, pattern,
-                 lambda c: c.rlike(pattern), f"not match with {pattern}")
+                 lambda c: c.rlike(go_pattern), f"not match with {pattern}")
 
 
 def _h_lowercase(cc, st, path, spec, schema):

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .compiler import compile_ruleset
 from .dsl import K, ObjectSchema
 from .engine import rule_count_exprs, validate
+from .audio.codecs import CODECS
 from .audio.decode import decode_check, decode_violations
 from .audio.files import decode_check_files
 from .operators.drift import HistSpec, drift_check, snapshot
@@ -194,12 +195,9 @@ def default_clip_rules() -> ObjectSchema:
 
 
 def default_codec_dim(spark: SparkSession) -> DataFrame:
-    """FIXTURES.md §2 dim_codec."""
+    """FIXTURES.md §2 dim_codec: one row per codec-table entry."""
     return spark.createDataFrame(
-        [("pcm_s16le", 16, "wav"), ("ulaw", 8, "wav"), ("alaw", 8, "wav"),
-         ("adpcm_ima", 4, "wav"), ("pcm_u8", 8, "wav"),
-         ("pcm_s24le", 24, "wav"), ("pcm_f32le", 32, "wav"),
-         ("pcm_f64le", 64, "wav")],
+        [(s.name, s.bits, "wav") for s in CODECS.values()],
         "codec string, bits_per_sample int, container string")
 
 

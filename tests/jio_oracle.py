@@ -75,6 +75,20 @@ def _go_to_lower(s: str) -> str:
     return "".join(_go_rune_case(c, False) for c in s)
 
 
+#: an escape, or a whole character class (a leading ']' and [:name:]
+#: items are literal members), or a bare '$'
+_RE_TOKEN = re.compile(r"(\\.)|(\[\^?\]?(?:\[:\w+:\]|\\.|[^\]])*\])|\$",
+                       re.DOTALL)
+
+
+def _go_end_anchor(pattern: str) -> str:
+    r"""Go RE2's ``$`` (no m flag) is end of text; Python's also matches
+    before a final ``\n``, so a bare ``$`` becomes ``\Z``. Python's ``.``
+    already rejects only ``\n``, as RE2's does."""
+    return _RE_TOKEN.sub(lambda m: m.group(1) or m.group(2) or r"\Z",
+                         pattern)
+
+
 #: an error is (rule_path, rule_name); None = no error
 Err = Optional[Tuple[str, str]]
 
@@ -278,7 +292,7 @@ def _validate(schema: BaseSchema, value: Any, path: str,
             rname = p.get("display", "regex")
             if not isinstance(v, str):
                 return (path, rname), True, v
-            if not re.search(p["pattern"], v):
+            if not re.search(_go_end_anchor(p["pattern"]), v):
                 return (path, rname), True, v
         elif name == "lowercase":
             if not isinstance(v, str):

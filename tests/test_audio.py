@@ -5,9 +5,8 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from jio_spark.audio.codecs import (alaw_decode, alaw_encode, decode_wav,
-                                    encode_alaw_wav, encode_pcm16_wav,
-                                    encode_ulaw_wav, snr_db, synth_wave,
+from jio_spark.audio.codecs import (ENCODERS, alaw_decode, alaw_encode,
+                                    decode_wav, snr_db, synth_wave,
                                     ulaw_decode, ulaw_encode)
 from jio_spark.audio.synth import (clips_frame, expected_signal,
                                    expected_transcript, make_row)
@@ -19,10 +18,8 @@ N = 2000  # generated clips for the distributed tests
 
 def test_codec_roundtrip_snr():
     pcm = synth_wave(440.0, 500, 16000)
-    for enc, codec in [(encode_pcm16_wav, "pcm_s16le"),
-                       (encode_ulaw_wav, "ulaw"),
-                       (encode_alaw_wav, "alaw")]:
-        dec, sr, fmt = decode_wav(enc(pcm, 16000))
+    for codec in ("pcm_s16le", "ulaw", "alaw"):
+        dec, sr, fmt = decode_wav(ENCODERS[codec](pcm, 16000))
         assert sr == 16000 and fmt == codec and len(dec) == len(pcm)
         assert snr_db(pcm, dec) >= 30.0, codec
 
@@ -38,7 +35,7 @@ def test_g711_monotone_and_bounded():
 def test_decode_rejects_garbage():
     with pytest.raises(ValueError):
         decode_wav(b"not audio at all")
-    good = encode_pcm16_wav(synth_wave(440, 100, 8000), 8000)
+    good = ENCODERS["pcm_s16le"](synth_wave(440, 100, 8000), 8000)
     with pytest.raises(ValueError):
         decode_wav(good[: len(good) // 2])
 
@@ -251,12 +248,11 @@ def test_parse_wav_walks_chunks_per_spec():
     raw = b"RIFF" + struct.pack("<I", len(body)) + body
     coded, got_sr, codec = parse_wav(raw)
     assert got_sr == sr and codec == "pcm_s16le"
-    assert np.array_equal(coded, pcm)
+    assert np.array_equal(coded.payload, pcm)
 
     # canonical 44-byte layout still parses (the synth fixtures)
-    from jio_spark.audio.codecs import encode_pcm16_wav
-    coded2, sr2, _ = parse_wav(encode_pcm16_wav(pcm, sr))
-    assert sr2 == sr and np.array_equal(coded2, pcm)
+    coded2, sr2, _ = parse_wav(ENCODERS["pcm_s16le"](pcm, sr))
+    assert sr2 == sr and np.array_equal(coded2.payload, pcm)
 
     # b'data' at the canonical offset but a junk chunk where fmt should
     # be: the old fixed-offset parse unpacked garbage as fmt/sr — the

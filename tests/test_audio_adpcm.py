@@ -16,11 +16,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from jio_spark.audio.codecs import (AdpcmCoded, adpcm_ima_decode_stacked,
-                                    adpcm_ima_encode,
-                                    adpcm_ima_samples_per_block,
-                                    decode_wav, encode_adpcm_wav, parse_wav,
-                                    snr_db, snr_db_vs_period, synth_wave)
+from jio_spark.audio.codecs import (CODECS, ENCODERS, adpcm_decode_stacked,
+                                    adpcm_frames_per_block,
+                                    adpcm_ima_encode, decode_wav,
+                                    encode_wav, parse_wav, snr_db,
+                                    snr_db_vs_period, synth_wave)
 from jio_spark.audio.decode import decode_check, decode_violations
 from jio_spark.audio.synth import (_row_params, expected_signal,
                                    expected_transcript)
@@ -55,7 +55,7 @@ def _oracle_step(nib, pred, index):
 
 
 def _oracle_decode_block(block, block_align):
-    spb = adpcm_ima_samples_per_block(block_align)
+    spb = adpcm_frames_per_block(block_align)
     pred = int.from_bytes(block[0:2], "little", signed=True)
     index = min(88, max(0, block[2]))
     out = [pred]
@@ -67,7 +67,7 @@ def _oracle_decode_block(block, block_align):
 
 
 def _oracle_encode_block(pcm, block_align):
-    spb = adpcm_ima_samples_per_block(block_align)
+    spb = adpcm_frames_per_block(block_align)
     assert len(pcm) == spb
     pred = int(pcm[0])
     d0 = abs(int(pcm[1]) - pred) if spb > 1 else 0
@@ -103,7 +103,7 @@ def _oracle_encode_block(pcm, block_align):
 
 
 BA = 256
-SPB = adpcm_ima_samples_per_block(BA)
+SPB = adpcm_frames_per_block(BA)
 
 
 def test_vectorized_decode_matches_scalar_oracle():
@@ -113,7 +113,7 @@ def test_vectorized_decode_matches_scalar_oracle():
               for i in range(6)]
     payload = np.frombuffer(b"".join(blocks), np.uint8)
     want = np.concatenate([_oracle_decode_block(b, BA) for b in blocks])
-    (got,) = adpcm_ima_decode_stacked([payload], BA)
+    (got,) = adpcm_decode_stacked([payload], BA)
     assert np.array_equal(want, got)
 
 
@@ -135,16 +135,16 @@ def test_saturation_and_index_clamp_against_oracle():
             np.resize(np.repeat(sq, reps), SPB)
         block = adpcm_ima_encode(pcm.astype(np.int16), BA)
         want = _oracle_decode_block(block, BA)
-        (got,) = adpcm_ima_decode_stacked(
+        (got,) = adpcm_decode_stacked(
             [np.frombuffer(block, np.uint8)], BA)
         assert np.array_equal(want, got)
 
 
 def test_container_roundtrip_fact_trim_and_fields():
     x = synth_wave(440.0, 333, 16000)      # 5328 samples: pads last block
-    raw = encode_adpcm_wav(x, 16000)
+    raw = ENCODERS["adpcm_ima"](x, 16000)
     coded, sr, codec = parse_wav(raw)
-    assert isinstance(coded, AdpcmCoded)
+    assert coded.spec is CODECS["adpcm_ima"]
     assert (sr, codec) == (16000, "adpcm_ima")
     assert len(coded) == len(x)            # fact chunk trims the padding
     assert coded.nbytes < len(x)           # ~4:1 vs int16, container aside
@@ -156,12 +156,12 @@ def test_container_roundtrip_fact_trim_and_fields():
 def test_stacked_equals_per_clip_across_mixed_block_aligns():
     views = []
     for dur, ba in [(40, 256), (200, 256), (1000, 512), (90, 512)]:
-        raw = encode_adpcm_wav(synth_wave(440.0, dur, 16000), 16000,
+        raw = ENCODERS["adpcm_ima"](synth_wave(440.0, dur, 16000), 16000,
                                block_align=ba)
         views.append(parse_wav(raw)[0])
     for ba in (256, 512):
         group = [v for v in views if v.block_align == ba]
-        stacked = adpcm_ima_decode_stacked([v.payload for v in group],
+        stacked = adpcm_decode_stacked([v.payload for v in group],
                                            ba)
         for v, s in zip(group, stacked):
             assert np.array_equal(v.decode(), s[:len(v)])
@@ -175,7 +175,7 @@ def test_stacked_equals_per_clip_across_mixed_block_aligns():
      "fact chunk exceeds"),                          # fact > capacity
 ])
 def test_malformed_adpcm_rejected(mutate, err):
-    raw = mutate(encode_adpcm_wav(synth_wave(440.0, 100, 16000), 16000))
+    raw = mutate(ENCODERS["adpcm_ima"](synth_wave(440.0, 100, 16000), 16000))
     with pytest.raises(ValueError, match=err):
         parse_wav(raw)
 
@@ -186,8 +186,8 @@ def test_snr_physics_pass_and_slope_overload_fail():
     the validator must report the failure, not hide codec physics."""
     lo = synth_wave(440.0, 500, 16000)
     hi = synth_wave(7000.0, 500, 16000)
-    lo_snr = snr_db(lo, decode_wav(encode_adpcm_wav(lo, 16000))[0])
-    hi_snr = snr_db(hi, decode_wav(encode_adpcm_wav(hi, 16000))[0])
+    lo_snr = snr_db(lo, decode_wav(ENCODERS["adpcm_ima"](lo, 16000))[0])
+    hi_snr = snr_db(hi, decode_wav(ENCODERS["adpcm_ima"](hi, 16000))[0])
     assert lo_snr >= 33.0
     assert hi_snr < 25.0
 
@@ -216,11 +216,7 @@ def test_decode_check_mixed_codecs_batched_path(spark):
         _, freq, sr, dur, _, _ = _row_params(i, clean=True)
         pcm = expected_signal(i, clean=True)
         codec = "adpcm_ima" if k % 2 == 0 else "ulaw"
-        raw = (encode_adpcm_wav(pcm, sr) if codec == "adpcm_ima"
-               else None)
-        if raw is None:
-            from jio_spark.audio.codecs import encode_ulaw_wav
-            raw = encode_ulaw_wav(pcm, sr)
+        raw = ENCODERS[codec](pcm, sr)
         rows.append((f"clip_{i:012d}", bytearray(raw), sr, dur, codec,
                      expected_transcript(i)))
     # slope-overload: freq near the top of the synth range over sr=8000
@@ -228,12 +224,12 @@ def test_decode_check_mixed_codecs_batched_path(spark):
         lambda f, sr, d: sr == 8000 and f >= 990 and d <= 2000, 1)
     _, _, sr_b, dur_b, _, _ = _row_params(bad_i, clean=True)
     rows.append((f"clip_{bad_i:012d}",
-                 bytearray(encode_adpcm_wav(
+                 bytearray(ENCODERS["adpcm_ima"](
                      expected_signal(bad_i, clean=True), sr_b)),
                  sr_b, dur_b, "adpcm_ima", expected_transcript(bad_i)))
     # truncated payload → one decode violation
     _, _, sr_t, dur_t, _, _ = _row_params(trunc_i, clean=True)
-    raw_t = encode_adpcm_wav(expected_signal(trunc_i, clean=True), sr_t)
+    raw_t = ENCODERS["adpcm_ima"](expected_signal(trunc_i, clean=True), sr_t)
     rows.append((f"clip_{trunc_i:012d}",
                  bytearray(raw_t[:len(raw_t) - 13]), sr_t, dur_t,
                  "adpcm_ima", expected_transcript(trunc_i)))
@@ -281,7 +277,7 @@ def test_fact_chunk_after_data_is_honored():
     stop at data, or the padding trim is lost and a correct external file
     gets false dur/snr violations."""
     x = synth_wave(440.0, 333, 16000)
-    canonical = encode_adpcm_wav(x, 16000)
+    canonical = ENCODERS["adpcm_ima"](x, 16000)
     # rearrange: header(12) + fmt(8+20) + fact(8+4) + data — move fact
     # after the data chunk
     fmt_chunk = canonical[12:40]
@@ -301,16 +297,16 @@ def test_stacked_rejects_misaligned_payloads():
     raise, not silently decode blocks straddling the clip boundary."""
     p = np.zeros(384, dtype=np.uint8)
     with pytest.raises(ValueError, match="not a multiple"):
-        adpcm_ima_decode_stacked([p, p], 256)
+        adpcm_decode_stacked([p, p], 256)
 
 
 def test_encode_block_align_out_of_range_is_valueerror():
     x = synth_wave(440.0, 50, 16000)
     for ba in (4, 0, 40000):
         with pytest.raises(ValueError, match="out of range"):
-            encode_adpcm_wav(x, 16000, block_align=ba)
+            ENCODERS["adpcm_ima"](x, 16000, block_align=ba)
     # the largest legal value must really fit the uint16 header fields
-    raw = encode_adpcm_wav(x, 16000, block_align=32771)
+    raw = ENCODERS["adpcm_ima"](x, 16000, block_align=32771)
     coded, _, codec = parse_wav(raw)
     assert codec == "adpcm_ima" and len(coded) == len(x)
 
@@ -327,7 +323,7 @@ def test_deferred_snr_is_chunk_invariant(spark, monkeypatch):
     for i in ok_is:
         _, _, sr_, d_, _, _ = _row_params(i, clean=True)
         rows.append((f"clip_{i:012d}",
-                     bytearray(encode_adpcm_wav(
+                     bytearray(ENCODERS["adpcm_ima"](
                          expected_signal(i, clean=True), sr_)),
                      sr_, d_, "adpcm_ima", expected_transcript(i)))
     df = spark.createDataFrame(
@@ -358,13 +354,12 @@ def test_per_codec_snr_threshold_mapping(spark):
     rows = []
     _, _, sr_a, d_a, _, _ = _row_params(i_8k, clean=True)
     rows.append((f"clip_{i_8k:012d}",
-                 bytearray(encode_adpcm_wav(
+                 bytearray(ENCODERS["adpcm_ima"](
                      expected_signal(i_8k, clean=True), sr_a)),
                  sr_a, d_a, "adpcm_ima", expected_transcript(i_8k)))
-    from jio_spark.audio.codecs import encode_ulaw_wav
     _, _, sr_u, d_u, _, _ = _row_params(i_16k, clean=True)
     rows.append((f"clip_{i_16k:012d}",
-                 bytearray(encode_ulaw_wav(
+                 bytearray(ENCODERS["ulaw"](
                      expected_signal(i_16k, clean=True), sr_u)),
                  sr_u, d_u, "ulaw", expected_transcript(i_16k)))
     df = spark.createDataFrame(
@@ -400,14 +395,13 @@ def test_files_decode_path_handles_adpcm(spark, tmp_path):
     via decode_check_files must pass every clean clip and tag partition
     values correctly."""
     from jio_spark.audio.files import decode_check_files
-    from jio_spark.audio.codecs import encode_ulaw_wav
 
     picked = _pick_indices(
         lambda f, sr, d: sr >= 16000 and f <= 550 and d <= 2000, 8)
     rows = []
     for k, i in enumerate(picked):
         _, _, sr_, d_, _, _ = _row_params(i, clean=True)
-        enc = encode_adpcm_wav if k % 2 == 0 else encode_ulaw_wav
+        enc = ENCODERS["adpcm_ima" if k % 2 == 0 else "ulaw"]
         rows.append((f"clip_{i:012d}",
                      bytearray(enc(expected_signal(i, clean=True), sr_)),
                      sr_, d_, "adpcm_ima" if k % 2 == 0 else "ulaw",
@@ -437,14 +431,13 @@ def test_full_job_over_adpcm_corpus_with_codec_gates(spark, tmp_path):
     violation under gates that its measured dB still fails."""
     from jio_spark.runner import (ClipsJobConfig, ClipsValidationJob,
                                   default_codec_dim)
-    from jio_spark.audio.codecs import encode_ulaw_wav
 
     picked = _pick_indices(
         lambda f, sr, d: sr >= 16000 and f <= 550 and d <= 2000, 12)
     rows = []
     for k, i in enumerate(picked):
         _, _, sr_, d_, _, _ = _row_params(i, clean=True)
-        enc = encode_adpcm_wav if k % 2 == 0 else encode_ulaw_wav
+        enc = ENCODERS["adpcm_ima" if k % 2 == 0 else "ulaw"]
         rows.append((f"clip_{i:012d}",
                      bytearray(enc(expected_signal(i, clean=True), sr_)),
                      sr_, d_, "adpcm_ima" if k % 2 == 0 else "ulaw",
@@ -456,7 +449,7 @@ def test_full_job_over_adpcm_corpus_with_codec_gates(spark, tmp_path):
     (marg_i,) = _pick_indices(
         lambda f, sr, d: sr == 8000 and f == 440.0 and d <= 2000, 1)
     _, _, sr_m, d_m, _, _ = _row_params(marg_i, clean=True)
-    marg_raw = encode_adpcm_wav(expected_signal(marg_i, clean=True), sr_m)
+    marg_raw = ENCODERS["adpcm_ima"](expected_signal(marg_i, clean=True), sr_m)
     marg_snr = snr_db(expected_signal(marg_i, clean=True),
                       decode_wav(marg_raw)[0])
     assert 26.0 < marg_snr < 30.0     # really in the discriminating band
@@ -468,7 +461,7 @@ def test_full_job_over_adpcm_corpus_with_codec_gates(spark, tmp_path):
         lambda f, sr, d: sr == 8000 and f >= 990 and d <= 2000, 1)
     _, _, sr_b, d_b, _, _ = _row_params(bad_i, clean=True)
     rows.append((f"clip_{bad_i:012d}",
-                 bytearray(encode_adpcm_wav(
+                 bytearray(ENCODERS["adpcm_ima"](
                      expected_signal(bad_i, clean=True), sr_b)),
                  sr_b, d_b, "adpcm_ima", expected_transcript(bad_i),
                  1))
@@ -516,7 +509,7 @@ def test_files_decode_carries_codec_under_mapping_gates(spark, tmp_path):
     for k, i in enumerate(picked):
         _, _, sr_, d_, _, _ = _row_params(i, clean=True)
         rows.append((f"clip_{i:012d}",
-                     bytearray(encode_adpcm_wav(
+                     bytearray(ENCODERS["adpcm_ima"](
                          expected_signal(i, clean=True), sr_)),
                      sr_, d_, "adpcm_ima", expected_transcript(i),
                      k % 2))
@@ -551,13 +544,12 @@ def test_files_decode_codec_partitioned_table_with_mapping_gates(
     mapping gates: the codec column arrives once as the partition tag —
     the passthrough must NOT add a duplicate (schema corruption)."""
     from jio_spark.audio.files import decode_check_files
-    from jio_spark.audio.codecs import encode_ulaw_wav
     picked = _pick_indices(
         lambda f, sr, d: sr >= 16000 and f <= 550 and d <= 2000, 4)
     rows = []
     for k, i in enumerate(picked):
         _, _, sr_, d_, _, _ = _row_params(i, clean=True)
-        enc = encode_adpcm_wav if k % 2 == 0 else encode_ulaw_wav
+        enc = ENCODERS["adpcm_ima" if k % 2 == 0 else "ulaw"]
         rows.append((f"clip_{i:012d}",
                      bytearray(enc(expected_signal(i, clean=True), sr_)),
                      sr_, d_, "adpcm_ima" if k % 2 == 0 else "ulaw",
@@ -601,12 +593,12 @@ def _extensible_wrap(raw: bytes, samples_union: int) -> bytes:
 def test_pcm_u8_roundtrip_and_snr():
     """WAV's legacy unsigned 8-bit PCM: exact LUT decode, ~44 dB on the
     fixture sine (8-bit quantization noise — clears the 30 dB gate)."""
-    from jio_spark.audio.codecs import encode_pcm8_wav, pcm_u8_decode
+    from jio_spark.audio.codecs import pcm_u8_decode
     x = synth_wave(440.0, 300, 16000)
-    coded, sr, codec = parse_wav(encode_pcm8_wav(x, 16000))
+    coded, sr, codec = parse_wav(ENCODERS["pcm_u8"](x, 16000))
     assert (sr, codec) == (16000, "pcm_u8")
-    assert coded.dtype == np.uint8 and len(coded) == len(x)
-    dec = pcm_u8_decode(coded)
+    assert coded.payload.dtype == np.uint8 and len(coded) == len(x)
+    dec = pcm_u8_decode(coded.payload)
     s = snr_db(x, dec)
     assert 38.0 < s < 55.0, s
     # the fused kernel must use the same LUT (bit-identical verdicts)
@@ -619,18 +611,16 @@ def test_extensible_container_unwraps_every_codec():
     """Modern encoders wrap even plain PCM in WAVE_FORMAT_EXTENSIBLE —
     each supported codec parsed through the 0xFFFE wrapper must decode
     identically to its classic-header form."""
-    from jio_spark.audio.codecs import (decode_coded, encode_pcm8_wav,
-                                        encode_pcm16_wav, encode_ulaw_wav)
     x = synth_wave(440.0, 120, 16000)
     forms = {
-        "pcm_s16le": encode_pcm16_wav(x, 16000),
-        "pcm_u8": encode_pcm8_wav(x, 16000),
-        "ulaw": encode_ulaw_wav(x, 16000),
+        "pcm_s16le": ENCODERS["pcm_s16le"](x, 16000),
+        "pcm_u8": ENCODERS["pcm_u8"](x, 16000),
+        "ulaw": ENCODERS["ulaw"](x, 16000),
         # compressed subformat: the Samples union carries
         # wSamplesPerBlock (505), NOT a bits value — the parser must
         # keep the container's 4-bit layout (reviewer repro: overriding
         # bits from the union rejected this valid file)
-        "adpcm_ima": encode_adpcm_wav(x, 16000),
+        "adpcm_ima": ENCODERS["adpcm_ima"](x, 16000),
     }
     unions = {"pcm_s16le": 16, "pcm_u8": 8, "ulaw": 8, "adpcm_ima": 505}
     for codec, raw in forms.items():
@@ -638,7 +628,7 @@ def test_extensible_container_unwraps_every_codec():
         c0, sr0, k0 = parse_wav(raw)
         c1, sr1, k1 = parse_wav(wrapped)
         assert (sr0, k0) == (sr1, k1) == (16000, codec)
-        assert np.array_equal(decode_coded(c0, k0), decode_coded(c1, k1))
+        assert np.array_equal(c0.decode(), c1.decode())
     # EXTENSIBLE PCM with valid_bits < container width (8 significant
     # bits in int16 containers): layout is still 16-bit — must parse as
     # s16le, not be misrouted to the u8 decoder
@@ -647,9 +637,8 @@ def test_extensible_container_unwraps_every_codec():
 
 
 def test_extensible_malformed_rejected():
-    from jio_spark.audio.codecs import encode_ulaw_wav
     x = synth_wave(440.0, 80, 16000)
-    raw = encode_ulaw_wav(x, 16000)
+    raw = ENCODERS["ulaw"](x, 16000)
     wrapped = bytearray(_extensible_wrap(raw, 8))
     # corrupt the GUID suffix → unknown subformat
     bad = bytes(wrapped[:48]) + b"\xde\xad" + bytes(wrapped[50:])
@@ -682,15 +671,13 @@ def test_pcm_s24_roundtrip_is_lossless_and_checks_pass(spark):
     """24-bit PCM written from a 16-bit source decodes back exactly
     (value<<8 then >>8), so a clean s24 clip measures infinite SNR; the
     live decode path and the EXTENSIBLE wrapper both carry it."""
-    from jio_spark.audio.codecs import (Pcm24Coded, decode_coded,
-                                        encode_pcm24_wav)
     x = synth_wave(440.0, 250, 16000)
-    raw = encode_pcm24_wav(x, 16000)
+    raw = ENCODERS["pcm_s24le"](x, 16000)
     coded, sr, codec = parse_wav(raw)
-    assert isinstance(coded, Pcm24Coded)
+    assert coded.spec is CODECS["pcm_s24le"]
     assert (sr, codec) == (16000, "pcm_s24le")
     assert len(coded) == len(x) and coded.nbytes == 3 * len(x)
-    assert np.array_equal(decode_coded(coded, codec), x)
+    assert np.array_equal(coded.decode(), x)
     # malformed: payload not a multiple of 3 bytes (shrink the data clen
     # at offset 40 of the 44-byte classic header and drop the last byte)
     bad = bytearray(raw)
@@ -700,7 +687,7 @@ def test_pcm_s24_roundtrip_is_lossless_and_checks_pass(spark):
     # EXTENSIBLE wrapper (valid bits 24)
     c2, _, k2 = parse_wav(_extensible_wrap(raw, 24))
     assert k2 == "pcm_s24le"
-    assert np.array_equal(decode_coded(c2, k2), x)
+    assert np.array_equal(c2.decode(), x)
     # end-to-end through the Arrow decode with reference checks
     picked = _pick_indices(
         lambda f, sr_, d: sr_ >= 16000 and f <= 550 and d <= 1500, 3)
@@ -708,7 +695,7 @@ def test_pcm_s24_roundtrip_is_lossless_and_checks_pass(spark):
     for i in picked:
         _, _, sr_, d_, _, _ = _row_params(i, clean=True)
         rows.append((f"clip_{i:012d}",
-                     bytearray(encode_pcm24_wav(
+                     bytearray(ENCODERS["pcm_s24le"](
                          expected_signal(i, clean=True), sr_)),
                      sr_, d_, "pcm_s24le", expected_transcript(i)))
     df = spark.createDataFrame(
@@ -739,36 +726,36 @@ def _oracle_decode_stereo_block(block, block_align):
     return chans
 
 
+def _interleave(left, right):
+    return np.stack([left, right], axis=1).reshape(-1)
+
+
 def test_stereo_decode_matches_scalar_oracle_bit_for_bit():
-    from jio_spark.audio.codecs import (adpcm_ima_encode_stereo,
-                                        adpcm_stereo_decode_channels,
-                                        adpcm_stereo_frames_per_block)
+    from jio_spark.audio.codecs import adpcm_decode_channels
     rng = np.random.default_rng(11)
     ba = 256
-    fpb = adpcm_stereo_frames_per_block(ba)
+    fpb = adpcm_frames_per_block(ba, channels=2)
     left = rng.integers(-32768, 32768, size=fpb * 5).astype(np.int16)
     right = rng.integers(-32768, 32768, size=fpb * 5).astype(np.int16)
-    payload = adpcm_ima_encode_stereo(left, right, ba)
+    payload = adpcm_ima_encode(_interleave(left, right), ba, channels=2)
     blocks = [payload[i:i + ba] for i in range(0, len(payload), ba)]
     want_l, want_r = [], []
     for b in blocks:
         ol, orr = _oracle_decode_stereo_block(b, ba)
         want_l.append(ol)
         want_r.append(orr)
-    got_l, got_r = adpcm_stereo_decode_channels(
-        np.frombuffer(payload, np.uint8), ba)
+    got_l, got_r = adpcm_decode_channels(
+        np.frombuffer(payload, np.uint8), ba, channels=2)
     assert np.array_equal(np.concatenate(want_l), got_l)
     assert np.array_equal(np.concatenate(want_r), got_r)
 
 
 def test_stereo_container_roundtrip_and_fact_trim():
-    from jio_spark.audio.codecs import (AdpcmCoded,
-                                        encode_adpcm_stereo_wav)
     l = synth_wave(440.0, 333, 16000)          # pads the last block
     r = synth_wave(660.0, 333, 16000)
-    raw = encode_adpcm_stereo_wav(l, r, 16000)
+    raw = encode_wav(_interleave(l, r), 16000, "adpcm_ima", channels=2)
     coded, sr, codec = parse_wav(raw)
-    assert isinstance(coded, AdpcmCoded) and coded.channels == 2
+    assert coded.spec is CODECS["adpcm_ima"] and coded.channels == 2
     assert (sr, codec) == (16000, "adpcm_ima")
     assert len(coded) == len(l)                # frames via fact chunk
     mix = coded.decode()
@@ -780,17 +767,16 @@ def test_stereo_container_roundtrip_and_fact_trim():
 
 
 def test_stereo_stacked_equals_per_clip():
-    from jio_spark.audio.codecs import (adpcm_stereo_decode_stacked,
-                                        encode_adpcm_stereo_wav)
     views = []
     for dur, ba in [(40, 256), (200, 256), (1000, 512), (90, 512)]:
         l = synth_wave(440.0, dur, 16000)
         r = synth_wave(550.0, dur, 16000)
-        raw = encode_adpcm_stereo_wav(l, r, 16000, block_align=ba)
+        raw = encode_wav(_interleave(l, r), 16000, "adpcm_ima",
+                         channels=2, block_align=ba)
         views.append(parse_wav(raw)[0])
     for ba in (256, 512):
         group = [v for v in views if v.block_align == ba]
-        stacked = adpcm_stereo_decode_stacked(
-            [v.payload for v in group], ba)
+        stacked = adpcm_decode_stacked(
+            [v.payload for v in group], ba, channels=2)
         for v, s in zip(group, stacked):
             assert np.array_equal(v.decode(), s[:len(v)])

@@ -14,9 +14,8 @@ import struct
 import numpy as np
 import pytest
 
-from jio_spark.audio.codecs import (CODED_CLASSES, DEFAULT_AMPLITUDE,
-                                    ENCODERS, Float32Coded, StereoCoded,
-                                    _one_period, _wav_bytes, decode_wav,
+from jio_spark.audio.codecs import (CODECS, DEFAULT_AMPLITUDE, ENCODERS,
+                                    _one_period, decode_wav,
                                     encode_stereo_wav, parse_wav,
                                     snr_db_vs_period, synth_wave,
                                     wrap_extensible)
@@ -25,6 +24,18 @@ from jio_spark.audio.decode import validate_gates
 PER_SAMPLE_CODECS = ["pcm_s16le", "ulaw", "alaw", "pcm_u8", "pcm_s24le",
                      "pcm_f32le"]
 _FMT_FLOAT = 3
+
+
+def _wav_bytes(payload: bytes, tag: int, sr: int, bits: int,
+               channels: int = 1) -> bytes:
+    """A canonical 44-byte-header WAV around an arbitrary payload — for
+    payloads no encoder writes (non-finite floats, ragged lengths,
+    widths the codec table does not list)."""
+    align = bits // 8 * channels
+    return struct.pack(
+        "<4sI4s4sIHHIIHH4sI", b"RIFF", 36 + len(payload), b"WAVE",
+        b"fmt ", 16, tag, channels, sr, sr * align, align, bits,
+        b"data", len(payload)) + payload
 
 
 @pytest.fixture(scope="module")
@@ -42,7 +53,7 @@ def test_f32_roundtrip_is_exact(pcm):
     assert (codec, sr) == ("pcm_f32le", 16000)
     assert np.array_equal(dec, pcm)
     coded, _, _ = parse_wav(raw)
-    assert isinstance(coded, Float32Coded)
+    assert coded.spec is CODECS["pcm_f32le"]
     assert len(coded) == len(pcm)
     assert coded.nbytes == 4 * len(pcm)
     period = _one_period(440.0, 16000, DEFAULT_AMPLITUDE)
@@ -101,7 +112,7 @@ def test_stereo_dual_mono_matches_mono(pcm, codec):
     verdict equals the mono counterpart's."""
     sraw = encode_stereo_wav(pcm, 16000, codec)
     coded, sr, got = parse_wav(sraw)
-    assert got == codec and isinstance(coded, StereoCoded)
+    assert got == codec and coded.channels == 2
     assert len(coded) == len(pcm)          # frames, not samples
     assert coded.nbytes == len(sraw) - 44  # payload only
     mono_dec, _, _ = decode_wav(ENCODERS[codec](pcm, 16000))
@@ -119,7 +130,7 @@ def test_stereo_dual_mono_matches_mono(pcm, codec):
 def test_stereo_under_extensible(pcm, codec):
     raw = wrap_extensible(encode_stereo_wav(pcm, 16000, codec))
     coded, _, got = parse_wav(raw)
-    assert got == codec and isinstance(coded, StereoCoded)
+    assert got == codec and coded.channels == 2
     mono_dec, _, _ = decode_wav(ENCODERS[codec](pcm, 16000))
     assert np.array_equal(coded.decode(), mono_dec)
 
@@ -156,16 +167,49 @@ def test_three_channels_rejected(pcm):
         parse_wav(bytes(raw))
 
 
+def test_more_than_two_channels_is_one_decode_violation(spark):
+    """3- and 6-channel WAVs — well-formed, written by the codec table's
+    own writer, for a per-sample codec and for block-coded ADPCM — are
+    outside the mono/stereo decode policy: parse_wav raises ValueError,
+    and the decode check reports exactly one violation per clip, the
+    decode one (no downmix is guessed, no dur/snr defect invented)."""
+    from jio_spark.audio.codecs import encode_wav
+    from jio_spark.audio.decode import decode_check, decode_violations
+    from jio_spark.audio.synth import (_row_params, expected_signal,
+                                       expected_transcript)
+    i = 5
+    _, _, sr, dur, _, _ = _row_params(i, False)
+    sig = expected_signal(i)
+    rows = []
+    for channels in (3, 6):
+        for codec in ("pcm_s16le", "adpcm_ima"):
+            raw = encode_wav(np.repeat(sig, channels), sr, codec,
+                             channels=channels,
+                             block_align=44 * channels)
+            with pytest.raises(ValueError, match="channel count"):
+                parse_wav(raw)
+            rows.append((f"clip_{i:012d}", bytearray(raw), sr, dur, codec,
+                         expected_transcript(i)))
+    df = spark.createDataFrame(
+        rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, "
+              "codec string, transcript string")
+    got = decode_violations(decode_check(df, salt=False)).collect()
+    assert len(got) == len(rows) == 4
+    assert {(r["rule_path"], r["rule_name"]) for r in got} \
+        == {("bytes", "decode")}
+    assert all("unsupported channel count" in r["actual"] for r in got)
+
+
 def test_stereo_adpcm_decodes_with_frame_semantics(pcm):
     """Round-5: stereo IMA ADPCM decodes for real (per-channel headers +
     4-byte-group interleave; the scalar-oracle bit-exactness pin lives
     in test_audio_adpcm.py). len() counts FRAMES via the fact chunk,
     and the dual-mono downmix clears the ADPCM gate like mono."""
-    from jio_spark.audio.codecs import AdpcmCoded, snr_db
+    from jio_spark.audio.codecs import snr_db
     raw = encode_stereo_wav(pcm, 16000, "adpcm_ima")
     coded, sr, codec = parse_wav(raw)
     assert codec == "adpcm_ima"
-    assert isinstance(coded, AdpcmCoded) and coded.channels == 2
+    assert coded.spec is CODECS["adpcm_ima"] and coded.channels == 2
     assert len(coded) == len(pcm)
     assert snr_db(pcm, coded.decode()) >= 20.0
 
@@ -277,24 +321,15 @@ def test_decode_check_over_mixed_layouts(spark):
         assert r["n_samples"] == len(sig), r   # frames, all layouts
 
 
-def test_parse_contract_classes_closed():
-    """Every coded view parse_wav can return is in CODED_CLASSES (the
-    fuzz contract's isinstance set) — adding a codec without extending
-    the set would break the SNR kernel's materialize branch silently."""
-    assert Float32Coded in CODED_CLASSES
-    assert StereoCoded in CODED_CLASSES
-
-
 # -- IEEE float64 (round-5 late addition) -----------------------------------
 
 def test_f64_roundtrip_extensible_and_stereo(pcm):
     """bits=64 under tag 3 (the rare scientific/DAW export width):
     /32768 float64 round-trips int16 exactly, unwraps from EXTENSIBLE,
     and carries stereo like every other per-sample codec."""
-    from jio_spark.audio.codecs import Float64Coded
     raw = ENCODERS["pcm_f64le"](pcm, 16000)
     coded, sr, codec = parse_wav(raw)
-    assert codec == "pcm_f64le" and isinstance(coded, Float64Coded)
+    assert codec == "pcm_f64le" and coded.spec is CODECS["pcm_f64le"]
     assert len(coded) == len(pcm) and coded.nbytes == 8 * len(pcm)
     dec, _, _ = decode_wav(raw)
     assert np.array_equal(dec, pcm)

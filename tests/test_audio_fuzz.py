@@ -16,8 +16,8 @@ import struct
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from jio_spark.audio.codecs import (CODED_CLASSES, ENCODERS, parse_wav,
-                                    snr_db_vs_period, synth_wave)
+from jio_spark.audio.codecs import (ENCODERS, Coded, encode_wav,
+                                    parse_wav, snr_db_vs_period, synth_wave)
 
 FUZZ = dict(deadline=None, max_examples=300)
 CODECS = sorted(ENCODERS)
@@ -29,8 +29,7 @@ def _assert_parse_contract(raw):
         coded, sr, codec = parse_wav(bytes(raw))
     except (ValueError, TypeError):
         return None
-    assert (isinstance(coded, CODED_CLASSES)
-            or (isinstance(coded, np.ndarray) and coded.ndim == 1))
+    assert isinstance(coded, Coded) and codec == coded.spec.name
     assert codec in {"pcm_s16le", "pcm_u8", "pcm_s24le", "pcm_f32le",
                      "pcm_f64le", "ulaw", "alaw", "adpcm_ima"}
     assert isinstance(sr, int) and sr >= 0
@@ -99,9 +98,8 @@ def test_adpcm_roundtrip_matches_scalar_oracle(seed, n, block_align):
     (via the vectorized decoder AND the in-test scalar transliteration in
     test_audio_adpcm) to identical samples, and the container roundtrip
     preserves the exact sample count through the fact chunk."""
-    from jio_spark.audio.codecs import (adpcm_ima_decode_stacked,
-                                        adpcm_ima_encode,
-                                        encode_adpcm_wav)
+    from jio_spark.audio.codecs import (adpcm_decode_stacked,
+                                        adpcm_ima_encode)
     from tests.test_audio_adpcm import _oracle_decode_block
     rng = np.random.default_rng(seed)
     pcm = rng.integers(-32768, 32768, size=n).astype(np.int16)
@@ -110,10 +108,11 @@ def test_adpcm_roundtrip_matches_scalar_oracle(seed, n, block_align):
               for i in range(0, len(payload), block_align)]
     want = np.concatenate([_oracle_decode_block(b, block_align)
                            for b in blocks])
-    (got,) = adpcm_ima_decode_stacked(
+    (got,) = adpcm_decode_stacked(
         [np.frombuffer(payload, np.uint8)], block_align)
     assert np.array_equal(want, got)
-    coded, _, codec = parse_wav(encode_adpcm_wav(pcm, 16000, block_align))
+    coded, _, codec = parse_wav(
+        encode_wav(pcm, 16000, "adpcm_ima", block_align=block_align))
     assert codec == "adpcm_ima" and len(coded) == n
 
 
@@ -178,8 +177,7 @@ def test_riff_walk_adversarial_containers(codec, inserts, swap,
     * moving data before fmt must reject (the walk requires fmt first);
     * truncating at any chunk boundary must reject or decode a valid
       prefix — never crash with a non-ValueError."""
-    from jio_spark.audio.codecs import (decode_coded, encode_stereo_wav,
-                                        wrap_extensible)
+    from jio_spark.audio.codecs import encode_stereo_wav, wrap_extensible
     pcm = synth_wave(330.0, 80, 8000)
     if codec.startswith("stereo:"):
         raw = encode_stereo_wav(pcm, 8000, codec.split(":")[1])
@@ -187,7 +185,7 @@ def test_riff_walk_adversarial_containers(codec, inserts, swap,
         raw = wrap_extensible(ENCODERS[codec.split(":")[1]](pcm, 8000))
     else:
         raw = ENCODERS[codec](pcm, 8000)
-    want = decode_coded(*parse_wav(raw)[::2])
+    want = parse_wav(raw)[0].decode()
     chunks = _chunks_of(raw)
     for pos, cid, body in inserts:
         chunks.insert(min(pos, len(chunks)), (cid, body))
@@ -211,8 +209,7 @@ def test_riff_walk_adversarial_containers(codec, inserts, swap,
     # must be bit-identical — unknown chunks can never corrupt a decode
     if trunc_at_boundary < 0 and not swap:
         assert sr == 8000
-        got_pcm = decode_coded(coded, got)
-        assert np.array_equal(got_pcm, want)
+        assert np.array_equal(coded.decode(), want)
 
 
 @settings(deadline=None, max_examples=200)
@@ -244,25 +241,25 @@ def test_stereo_adpcm_roundtrip_matches_scalar_oracle(seed, n, ba):
     vectorized stereo encoder's payload decodes per channel to exactly
     what the scalar stereo-block oracle produces, and the container
     round trip preserves the frame count through the fact chunk."""
-    from jio_spark.audio.codecs import (AdpcmCoded,
-                                        adpcm_ima_encode_stereo,
-                                        adpcm_stereo_decode_channels,
-                                        encode_adpcm_stereo_wav)
-    from tests.test_audio_adpcm import _oracle_decode_stereo_block
+    from jio_spark.audio.codecs import (adpcm_decode_channels,
+                                        adpcm_ima_encode)
+    from tests.test_audio_adpcm import (_interleave,
+                                        _oracle_decode_stereo_block)
     rng = np.random.default_rng(seed)
     left = rng.integers(-32768, 32768, size=n).astype(np.int16)
     right = rng.integers(-32768, 32768, size=n).astype(np.int16)
-    payload = adpcm_ima_encode_stereo(left, right, ba)
+    pcm = _interleave(left, right)
+    payload = adpcm_ima_encode(pcm, ba, channels=2)
     want_l, want_r = [], []
     for i in range(0, len(payload), ba):
         ol, orr = _oracle_decode_stereo_block(payload[i:i + ba], ba)
         want_l.append(ol)
         want_r.append(orr)
-    got_l, got_r = adpcm_stereo_decode_channels(
-        np.frombuffer(payload, np.uint8), ba)
+    got_l, got_r = adpcm_decode_channels(
+        np.frombuffer(payload, np.uint8), ba, channels=2)
     assert np.array_equal(np.concatenate(want_l), got_l)
     assert np.array_equal(np.concatenate(want_r), got_r)
     coded, _, codec = parse_wav(
-        encode_adpcm_stereo_wav(left, right, 16000, ba))
-    assert codec == "adpcm_ima" and isinstance(coded, AdpcmCoded)
+        encode_wav(pcm, 16000, "adpcm_ima", channels=2, block_align=ba))
+    assert codec == "adpcm_ima"
     assert coded.channels == 2 and len(coded) == n

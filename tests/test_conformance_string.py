@@ -69,6 +69,32 @@ def test_regex(spark):
         == "field `v` value google.com not match with ^.+\\.$"
 
 
+#: (pattern, value, Go RE2 verdict): RE2's ``$`` without the m flag is end
+#: of text and its ``.`` rejects only ``\n``; Java's rlike treats \r, \x85,
+#: \u2028 and \u2029 as line terminators too, and Python's ``$`` matches
+#: before a final \n. The first six are the pinned divergences; the rest
+#: keep ``$`` as a literal where it is escaped or inside a class.
+_GO_LINE_CASES = [
+    ("c$", "c\u2028", False), ("c$", "c\r", False), ("c$", "c\x85", False),
+    ("c$", "c\u2029", False), ("c$", "c\n", False),
+    ("a.c", "a\u2028c", True),
+    ("c$", "c", True), ("a.c", "a\nc", False), (r"^\$$", "$", True),
+    ("[$]c$", "$c", True), ("[$]c$", "$c\r", False),
+]
+
+
+def test_regex_line_terminators_are_go_exact(spark):
+    from jio_oracle import jio_validate
+    for pattern in dict.fromkeys(p for p, _, _ in _GO_LINE_CASES):
+        cases = [(v, ok) for p, v, ok in _GO_LINE_CASES if p == pattern]
+        schema = K.string().regex(pattern)
+        got = run_leaf(spark, schema, [v for v, _ in cases], "string")
+        for (value, ok), (_, engine_ok, _, _) in zip(cases, got):
+            assert engine_ok == ok, (pattern, value)
+            assert (jio_validate(schema, value)[0] is None) == ok, \
+                (pattern, value)
+
+
 def test_alphanum(spark):
     # string_test.go:215-228
     assert passes(spark, K.string().alphanum(), "google", "string")
@@ -136,7 +162,7 @@ def test_trim_is_white_space_not_python_strip(spark):
     assert mutated(spark, K.string().trim(), v, "string") == v
     assert mutated(spark, K.string().trim(), " \x1ca ", "string") \
         == "\x1ca"                         # outer spaces go, \x1c stays
-    assert mutated(spark, K.string().trim(), " a　",
+    assert mutated(spark, K.string().trim(), "\u2028a　",
                    "string") == "a"        # LS / ideographic space trim
 
 

@@ -7,6 +7,7 @@ embedded in ``__spark_entry__.oracle_sql()``."""
 import sys
 from pathlib import Path
 
+import numpy as np
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -14,7 +15,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from tools.derive_rows_only_oracles import (N_CLIPS, N_MIXED,
                                             derive_audio_checks,
                                             derive_audio_decode,
-                                            derive_multimodal)
+                                            derive_multimodal,
+                                            parse_wav_independent)
 from jio_spark.audio.synth import make_row, make_row_mixed
 
 
@@ -85,3 +87,31 @@ def test_stats_profile_approx_bounds(spark):
         ("l_extendedprice", True, True),
         ("l_quantity", True, True),
         ("l_returnflag", True, True)]
+
+
+def test_independent_decoder_agrees_on_pcm_f64le():
+    """The independent decoder covers float64 like every other codec:
+    mono, true stereo, EXTENSIBLE-wrapped and a non-finite payload
+    decode to the engine's samples, rate and codec name."""
+    import struct
+    from jio_spark.audio.codecs import (ENCODERS, decode_wav, encode_wav,
+                                        synth_wave, wrap_extensible)
+    pcm = synth_wave(440.0, 250, 16000)
+    stereo = np.stack([pcm, pcm[::-1]], axis=1).reshape(-1)
+    odd = np.array([np.nan, np.inf, -np.inf, 0.25, -1.5, 1e300,
+                    0.5 / 32768, 1.5 / 32768], dtype="<f8").tobytes()
+    nonfinite = struct.pack(
+        "<4sI4s4sIHHIIHH4sI", b"RIFF", 36 + len(odd), b"WAVE", b"fmt ",
+        16, 3, 1, 8000, 8000 * 8, 8, 64, b"data", len(odd)) + odd
+    raws = [ENCODERS["pcm_f64le"](pcm, 16000),
+            encode_wav(stereo, 16000, "pcm_f64le", channels=2),
+            wrap_extensible(ENCODERS["pcm_f64le"](pcm, 16000)),
+            wrap_extensible(encode_wav(stereo, 16000, "pcm_f64le",
+                                       channels=2)),
+            nonfinite]
+    for raw in raws:
+        want, want_sr, want_codec = decode_wav(raw)
+        got, got_sr, got_codec = parse_wav_independent(raw)
+        assert (got_sr, got_codec) == (want_sr, want_codec)
+        assert got_codec == "pcm_f64le"
+        assert np.array_equal(got, want)

@@ -350,7 +350,7 @@ def test_decode_stream_end_to_end(spark, tmp_path):
     per-codec gates, a corrupt payload emits exactly one decode
     violation, and the watermarked rates window counts it."""
     from jio_spark.streaming import decode_stream
-    from jio_spark.audio.codecs import encode_adpcm_wav, encode_ulaw_wav
+    from jio_spark.audio.codecs import ENCODERS
     from jio_spark.audio.synth import (_row_params, expected_signal,
                                        expected_transcript)
 
@@ -363,7 +363,7 @@ def test_decode_stream_end_to_end(spark, tmp_path):
     rows = []
     for k, i in enumerate(picked):
         _, _, sr_, d_, _, _ = _row_params(i, True)
-        enc = encode_adpcm_wav if k % 2 == 0 else encode_ulaw_wav
+        enc = ENCODERS["adpcm_ima" if k % 2 == 0 else "ulaw"]
         raw = enc(expected_signal(i, True), sr_)
         if k == 3:
             raw = raw[: len(raw) // 3]          # corrupt payload

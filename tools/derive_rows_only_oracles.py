@@ -111,8 +111,8 @@ def _adpcm_block_scalar(block: bytes, block_align: int) -> list:
 
 def parse_wav_independent(raw: bytes):
     """(int16 MONO PCM, sample rate, container codec name) or raises
-    ValueError. Full decode surface: the four PCM widths (incl. IEEE
-    float32), G.711, IMA ADPCM, WAVE_FORMAT_EXTENSIBLE unwrap, fact
+    ValueError. Full decode surface: the PCM widths (incl. IEEE float32
+    and float64), G.711, IMA ADPCM, WAVE_FORMAT_EXTENSIBLE unwrap, fact
     chunks, and 2-channel downmix (L+R+1)//2 — each written in its own
     formulation (chunk scan into a list, scalar ADPCM recurrence, (b-128)
     *256 u8 rescale, int8-viewed s24 sign byte) so a transcription error
@@ -206,14 +206,15 @@ def parse_wav_independent(raw: bytes):
         val = (b[:, 0].astype(np.int32) + (b[:, 1].astype(np.int32) * 256)
                + (b[:, 2].astype(np.int8).astype(np.int32) * 65536))
         pcm, codec = (val >> 8).astype(np.int16), "pcm_s24le"
-    elif tag == 3 and bits == 32:
-        if dlen % 4:
-            raise ValueError("bad float32")
-        x = np.round(np.frombuffer(body, "<f4").astype(np.float64)
+    elif tag == 3 and bits in (32, 64):
+        width = bits // 8
+        if dlen % width:
+            raise ValueError(f"bad float{bits}")
+        x = np.round(np.frombuffer(body, f"<f{width}").astype(np.float64)
                      * 32768.0)
         x = np.nan_to_num(x, nan=0.0, posinf=32767.0, neginf=-32768.0)
         pcm, codec = np.clip(x, -32768, 32767).astype(np.int16), \
-            "pcm_f32le"
+            f"pcm_f{bits}le"
     elif tag == 7 and bits == 8:
         pcm, codec = _ULAW[np.frombuffer(body, np.uint8)], "ulaw"
     elif tag == 6 and bits == 8:
